@@ -367,8 +367,12 @@ def main() -> None:
             )
         )
     for p in outs:
-        with open(p, "w") as fh:
-            json.dump(payload, fh, indent=1)
+        # an unwritable artifact must not cost the stdout line below
+        try:
+            with open(p, "w") as fh:
+                json.dump(payload, fh, indent=1)
+        except OSError as e:
+            print(f"bench: could not write {p}: {e}", file=sys.stderr)
     # The one-line JSON is the LAST thing on stdout (r13 verdict #2: the
     # r12 artifact survived only as a truncated output tail): stop the
     # session first so no late JVM/py4j output can trail the line.

@@ -1238,7 +1238,6 @@ def dedup_table_path(sf_dir: str) -> str:
 # and every future persisted index); these are the historical local names.
 from ..state import corpus_snapshot as _corpus_snapshot  # noqa: E402
 from ..state import read_manifest as _state_manifest  # noqa: E402
-from ..state import write_manifest as _write_state_manifest  # noqa: E402
 
 
 # ------------------------------------------- persisted shingle counts ------
@@ -1302,32 +1301,47 @@ def _read_shingle_counts(spark: SparkSession, root: str, man: dict) -> DataFrame
     )
 
 
+def _counts_state(spark: SparkSession, root: str, docs=None):
+    """The shingle-counts family on the shared ``state.StateRoot``
+    lifecycle: one appended ``counts`` kind. ``docs`` (a zero-argument
+    callable) supplies the build input."""
+    from ..state import StateRoot, gen_dir
+
+    def build() -> dict:
+        _counts_of(docs().select("doc_id", "text")).write.mode(
+            "overwrite"
+        ).parquet(gen_dir(root, "counts", 0))
+        return {"gen": 0, "base_gen": 0}
+
+    def fold(man: dict, delta_docs: DataFrame) -> dict:
+        standing = _read_shingle_counts(spark, root, man)
+        # replay-drop: a re-delivered epoch's doc_ids are already in the state
+        delta = delta_docs.select("doc_id", "text").join(
+            standing.select("doc_id").distinct(), "doc_id", "left_anti"
+        )
+        if delta.isEmpty():
+            return man
+        _counts_of(delta).write.mode("overwrite").parquet(
+            gen_dir(root, "counts", man["gen"] + 1)
+        )
+        return {**man, "gen": man["gen"] + 1}
+
+    def compact(man: dict, gen: int) -> None:
+        _read_shingle_counts(spark, root, man).write.mode("overwrite").parquet(
+            gen_dir(root, "counts", gen)
+        )
+
+    return StateRoot(
+        root, "counts state", build=build, fold=fold, compact=compact,
+        kinds=("counts",), hint="run build_shingle_counts",
+    )
+
+
 def build_shingle_counts(
     spark: SparkSession, docs: DataFrame, root: str, files: dict | None = None
 ) -> DataFrame:
     """Full build of the counts state at ``root`` (under the lease)."""
-    from ..state import maintenance_lease
-
-    with maintenance_lease(root):
-        return _build_shingle_counts_locked(spark, docs, root, files)
-
-
-def _build_shingle_counts_locked(
-    spark: SparkSession, docs: DataFrame, root: str, files: dict | None = None
-) -> DataFrame:
-    import os
-    import shutil
-
-    from ..state import gen_dir
-
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    _counts_of(docs.select("doc_id", "text")).write.mode("overwrite").parquet(
-        gen_dir(root, "counts", 0)
-    )
-    man = _write_state_manifest(
-        root, {"gen": 0, "base_gen": 0, "files": files or {}}
-    )
+    man = _counts_state(spark, root, lambda: docs).build(files)
     return _read_shingle_counts(spark, root, man)
 
 
@@ -1344,101 +1358,29 @@ def maintain_shingle_counts(
     generation files stay invisible until the manifest commit. Runs
     under the maintenance lease; auto-compacts past the manifest
     threshold with one-cycle-grace expiry."""
-    from ..state import maintenance_lease
-
-    with maintenance_lease(root):
-        return _maintain_shingle_counts_locked(spark, delta_docs, root, files)
-
-
-def _maintain_shingle_counts_locked(
-    spark: SparkSession,
-    delta_docs: DataFrame,
-    root: str,
-    files: dict | None = None,
-) -> DataFrame:
-    from ..state import expire_generations, gen_dir
-
-    man = _state_manifest(root)
-    if man is None:
-        raise ValueError(f"no counts state at {root}; run build_shingle_counts")
-    standing = _read_shingle_counts(spark, root, man)
-    # replay-drop: a re-delivered epoch's doc_ids are already in the state
-    delta = delta_docs.select("doc_id", "text").join(
-        standing.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-    if delta.isEmpty():
-        if files is not None and files != man.get("files"):
-            man = _write_state_manifest(root, {**man, "files": files})
-        return _read_shingle_counts(spark, root, man)
-    gen = man["gen"]
-    _counts_of(delta).write.mode("overwrite").parquet(
-        gen_dir(root, "counts", gen + 1)
-    )
-    man = _write_state_manifest(
-        root,
-        {
-            **man,
-            "gen": gen + 1,
-            "files": files if files is not None else man.get("files", {}),
-        },
-    )
-    # auto-compaction, same policy as labels/ANN
-    thresh = int(man.get("auto_compact_gens", DEDUP_AUTO_COMPACT_GENS))
-    if man["gen"] - man.get("base_gen", 0) + 1 > thresh:
-        floor_old = int(man.get("base_gen", 0))
-        _read_shingle_counts(spark, root, man).write.mode(
-            "overwrite"
-        ).parquet(gen_dir(root, "counts", man["gen"] + 1))
-        man = _write_state_manifest(
-            root,
-            {**man, "gen": man["gen"] + 1, "base_gen": man["gen"] + 1},
-        )
-        expire_generations(
-            root, {"counts": set(range(floor_old, man["gen"] + 1))}
-        )
+    man = _counts_state(spark, root).maintain(delta_docs, files)
     return _read_shingle_counts(spark, root, man)
 
 
 def ensure_shingle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve the persisted (doc_id, shingle_h, cnt) table, building or
-    O(delta)-appending as the corpus snapshot dictates. Same protocol as
-    the labels/ANN roots: maintenance lease, generation-scoped staging,
-    atomic manifest commit, auto-compaction with one-cycle-grace expiry.
-    The streaming twin (``streaming/dedup_stream.maintain_counts_stream``)
-    drives :func:`maintain_shingle_counts` from foreachBatch epochs.
+    O(delta)-appending as the corpus snapshot dictates, on the shared
+    ``state.StateRoot`` lifecycle. The streaming twin
+    (``streaming/dedup_stream.maintain_counts_stream``) drives
+    :func:`maintain_shingle_counts` from foreachBatch epochs.
     """
     import os
 
-    from ..state import maintenance_lease, snapshot_delta
-
     src = os.path.join(sf_dir, "documents.parquet")
     root = shingle_counts_path(sf_dir)
-
-    # fast path: no lock taken when the committed state is fresh
-    man = _state_manifest(root)
-    cur = _corpus_snapshot(src)
-    if man is not None and snapshot_delta(man["files"], cur)[0] == "unchanged":
-        return _read_shingle_counts(spark, root, man)
-
-    with maintenance_lease(root):
-        man = _state_manifest(root)  # re-read under the lease
-        cur = _corpus_snapshot(src)
-        if man is not None:
-            kind, new_rel = snapshot_delta(man["files"], cur)
-            if kind == "unchanged":
-                return _read_shingle_counts(spark, root, man)
-            if kind == "appended" and not os.path.isfile(src):
-                delta = spark.read.parquet(
-                    *[os.path.join(src, rel) for rel in new_rel]
-                ).select("doc_id", "text")
-                return _maintain_shingle_counts_locked(
-                    spark, delta, root, files=cur
-                )
-        # full (re)build — direct read, not load_table (rebuilds exist
-        # because the corpus changed; the relation cache pins file lists)
-        docs = spark.read.parquet(src).select("doc_id", "text")
-        return _build_shingle_counts_locked(spark, docs, root, files=cur)
-
+    # rebuilds read directly, not via load_table: its relation cache pins
+    # file lists and the corpus just changed
+    man = _counts_state(spark, root, lambda: spark.read.parquet(src)).ensure(
+        lambda: _corpus_snapshot(src),
+        lambda new: spark.read.parquet(*[os.path.join(src, f) for f in new]),
+        appendable=not os.path.isfile(src),
+    )
+    return _read_shingle_counts(spark, root, man)
 
 def _capped_index_for(
     spark: SparkSession, sf_dir: str, materialize: bool = True
@@ -1500,22 +1442,38 @@ def _dfreq_paths(root: str, gen: int, base: int = 0) -> list:
     return [_dfreq_gen_dir(root, g) for g in range(base, gen + 1)]
 
 
+def _labels_state(spark: SparkSession, root: str, docs=None):
+    """The labels family on the shared ``state.StateRoot`` lifecycle:
+    appended ``index``/``dfreq`` generations plus the flat per-generation
+    labels/pairs directories. ``docs`` (a zero-argument callable)
+    supplies the build input."""
+    from ..state import StateRoot
+
+    return StateRoot(
+        root,
+        "labels state",
+        build=lambda: _build_labels(spark, docs(), root),
+        fold=lambda man, delta: _fold_labels(spark, root, man, delta),
+        compact=lambda man, gen: _compact_labels(spark, root, man, gen),
+        kinds=("index", "dfreq"),
+        expire_extra=lambda man, lo, floor: _expire_flat_labels(
+            root, man, lo, floor
+        ),
+        hint="run build_dedup_state",
+    )
+
+
 def build_dedup_state(
     spark: SparkSession, docs: DataFrame, root: str, files: dict | None = None
 ) -> DataFrame:
-    """Concurrent-writer-safe wrapper: the full rebuild runs under the
-    state root's maintenance lease (see :func:`state.maintenance_lease`)
-    so a concurrent maintainer cannot interleave staging with the rmtree.
-    """
-    from ..state import maintenance_lease
-
-    with maintenance_lease(root):
-        return _build_dedup_state_locked(spark, docs, root, files)
+    """Full rebuild under the state root's maintenance lease (see
+    :func:`state.maintenance_lease`), so a concurrent maintainer cannot
+    interleave staging with the rmtree."""
+    man = _labels_state(spark, root, lambda: docs).build(files)
+    return spark.read.parquet(_labels_dir(root, man["gen"]))
 
 
-def _build_dedup_state_locked(
-    spark: SparkSession, docs: DataFrame, root: str, files: dict | None = None
-) -> DataFrame:
+def _build_labels(spark: SparkSession, docs: DataFrame, root: str) -> dict:
     """Full build of the labels state at ``root`` from ``docs``:
     ONE pass of the expensive front end — n-gram Jaccard pairs →
     star-contraction components (O(log n) rounds) for ``cluster_id``,
@@ -1524,11 +1482,6 @@ def _build_dedup_state_locked(
     (doc_id, shingle_h) and the df-increment log (shingle_h, df_inc).
     At 100 TB this is the scheduled maintenance job; every consumer
     afterwards pays one columnar scan of a 3-column table."""
-    import os
-    import shutil
-
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
     docs = docs.select("doc_id", "text")
 
     sh = _distinct_shingles(docs).select(
@@ -1557,10 +1510,7 @@ def _build_dedup_state_locked(
         .join(_simhash_fps(docs), "doc_id")
     )
     full.write.mode("overwrite").parquet(_labels_dir(root, 0))
-    _write_state_manifest(
-        root, {"gen": 0, "base_gen": 0, "files": files or {}}
-    )
-    return spark.read.parquet(_labels_dir(root, 0))
+    return {"gen": 0, "base_gen": 0}
 
 
 def maintain_dedup_state(
@@ -1569,63 +1519,32 @@ def maintain_dedup_state(
     root: str,
     files: dict | None = None,
 ) -> DataFrame:
-    """Concurrent-writer-safe wrapper: maintenance serializes on the
-    state root's lease. Two simultaneous maintainers used to interleave
-    gen+1 staging writes and last-writer-wins away a generation (r8
-    verdict, What's missing #3); under the lease the second writer
-    re-reads the manifest AFTER the first commits, sees the new
-    generation, and applies its delta on top — both deltas land. The
-    manifest CAS inside write_manifest stays as defense-in-depth for
-    writers that bypass the lease.
+    """Concurrent-writer-safe maintenance: it serializes on the state
+    root's lease. Two simultaneous maintainers used to interleave gen+1
+    staging writes and last-writer-wins away a generation (r8 verdict,
+    What's missing #3); under the lease the second writer re-reads the
+    manifest AFTER the first commits, sees the new generation, and
+    applies its delta on top — both deltas land. The manifest CAS inside
+    write_manifest stays as defense-in-depth for writers that bypass the
+    lease.
 
     Auto-compaction: when the commit pushes the live generation width
     past ``auto_compact_gens`` (manifest-recorded; default
-    ``DEDUP_AUTO_COMPACT_GENS``), compaction runs here, inside the
+    ``state.AUTO_COMPACT_GENS``), compaction runs here, inside the
     already-held lease — the scheduled job the append path amortizes
     against becomes part of the append path itself once the reader-side
     union would grow past the threshold. Space reclaim follows the
-    grace-window rule (see :func:`_expire_dedup_state_locked`): only
+    grace-window rule (see :func:`_expire_flat_labels`): only
     generations superseded TWO compactions ago are deleted, so a
     DataFrame returned before the previous compaction still
     materializes."""
-    from ..state import maintenance_lease
-
-    with maintenance_lease(root):
-        out = _maintain_dedup_state_locked(spark, delta_docs, root, files)
-        _auto_compact_dedup_if_wide(spark, root)
-        return out
+    man = _labels_state(spark, root).maintain(delta_docs, files)
+    return spark.read.parquet(_labels_dir(root, man["gen"]))
 
 
-DEDUP_AUTO_COMPACT_GENS = 8
-
-
-def _auto_compact_dedup_if_wide(spark: SparkSession, root: str) -> bool:
-    """Compact + grace-expire when the live generation width exceeds the
-    manifest's threshold. Caller holds the maintenance lease (the locked
-    bodies are called directly — flock is not reentrant across fds)."""
-    man = _state_manifest(root)
-    if man is None:
-        return False
-    thresh = int(man.get("auto_compact_gens", DEDUP_AUTO_COMPACT_GENS))
-    if man["gen"] - man.get("base_gen", 0) + 1 <= thresh:
-        return False
-    # one-cycle grace: generations below the PRE-compaction base were
-    # superseded by the previous compaction and have now survived a full
-    # extra cycle — any DataFrame handed out before that compaction has
-    # had the whole cycle to materialize. Generations superseded by THIS
-    # compaction ([old base, gen]) are kept until the next one.
-    floor_old = int(man.get("base_gen", 0))
-    _compact_dedup_state_locked(spark, root)
-    _expire_dedup_state_locked(root, floor=floor_old)
-    return True
-
-
-def _maintain_dedup_state_locked(
-    spark: SparkSession,
-    delta_docs: DataFrame,
-    root: str,
-    files: dict | None = None,
-) -> DataFrame:
+def _fold_labels(
+    spark: SparkSession, root: str, man: dict, delta_docs: DataFrame
+) -> dict:
     """Apply an appended batch of documents to the labels state at
     ``root`` in O(delta + affected) — the corpus text is NEVER re-read;
     only the persisted index/df-log/pairs/labels and the delta rows are.
@@ -1654,9 +1573,6 @@ def _maintain_dedup_state_locked(
     generations are left on disk (a concurrently returned DataFrame may
     still lazily read them); the judge-facing cold-cache path is 'delete
     the state root'."""
-    man = _state_manifest(root)
-    if man is None:
-        raise ValueError(f"no labels state at {root}; run build_dedup_state")
     gen = man["gen"]
     base_gen = man.get("base_gen", 0)
     labels_old = spark.read.parquet(_labels_dir(root, gen))
@@ -1670,9 +1586,7 @@ def _maintain_dedup_state_locked(
         .localCheckpoint()
     )
     if delta.isEmpty():
-        if files is not None and files != man.get("files"):
-            _write_state_manifest(root, {**man, "files": files})
-        return labels_old
+        return man
     delta_ids = delta.select("doc_id").localCheckpoint()
 
     d_sh = (
@@ -1874,78 +1788,48 @@ def _maintain_dedup_state_locked(
     )
     labels_new = keep_labels.union(sub_full)
     labels_new.write.mode("overwrite").parquet(_labels_dir(root, gen + 1))
-    _write_state_manifest(
-        root,
-        {
-            **man,
-            "gen": gen + 1,
-            "base_gen": base_gen,
-            "files": files if files is not None else man.get("files", {}),
-        },
-    )
-    return spark.read.parquet(_labels_dir(root, gen + 1))
+    return {**man, "gen": gen + 1, "base_gen": base_gen}
 
 
 def compact_dedup_state(spark: SparkSession, root: str) -> None:
-    """Concurrent-writer-safe wrapper: compaction serializes on the
-    state root's maintenance lease like build/maintain."""
-    from ..state import maintenance_lease
-
-    with maintenance_lease(root):
-        return _compact_dedup_state_locked(spark, root)
-
-
-def _compact_dedup_state_locked(spark: SparkSession, root: str) -> None:
     """Merge the labels state's index/df-log generations into a single
     base generation — the scheduled compaction job the append path
     amortizes against (every maintenance adds one generation directory;
     readers union them, so periodic compaction keeps the union width
     O(1), exactly like Iceberg's rewrite_manifests/rewrite_data_files).
+    Serializes on the state root's maintenance lease like
+    build/maintain."""
+    _labels_state(spark, root).compact()
 
-    Commit protocol mirrors maintenance: the merged files are staged as
-    generation ``gen+1`` (df-log pre-aggregated to one row per shingle —
-    the sum is associative, so the merged log is equivalent by
-    construction), labels/pairs are carried over byte-identically, and
-    the manifest replace is the single commit point with
-    ``base_gen = gen+1`` recorded so readers union only the compacted
-    generation onward. A crash mid-compaction leaves the state serving
-    the old generations; the retry overwrites the staged files."""
-    man = _state_manifest(root)
-    if man is None:
-        raise ValueError(f"no labels state at {root}; run build_dedup_state")
-    gen = man["gen"]
-    base = man.get("base_gen", 0)
-    if base == gen:
-        return  # single live generation — nothing to merge
-    idx_paths = [_index_gen_dir(root, g) for g in range(base, gen + 1)]
-    df_paths = [_dfreq_gen_dir(root, g) for g in range(base, gen + 1)]
-    spark.read.parquet(*idx_paths).write.mode("overwrite").parquet(
-        _index_gen_dir(root, gen + 1)
+
+def _compact_labels(spark: SparkSession, root: str, man: dict, ngen: int) -> dict:
+    """Stage the compacted generation ``ngen``: the df-log pre-aggregated
+    to one row per shingle (the sum is associative, so the merged log is
+    equivalent by construction) and labels/pairs carried over
+    byte-identically; the manifest commit records ``base_gen = ngen`` so
+    readers union only the compacted generation onward. A crash
+    mid-compaction leaves the state serving the old generations; the
+    retry overwrites the staged files."""
+    gen, base = man["gen"], man.get("base_gen", 0)
+    spark.read.parquet(*_index_paths(root, gen, base)).write.mode(
+        "overwrite"
+    ).parquet(_index_gen_dir(root, ngen))
+    spark.read.parquet(*_dfreq_paths(root, gen, base)).groupBy(
+        "shingle_h"
+    ).agg(F.sum("df_inc").alias("df_inc")).write.mode("overwrite").parquet(
+        _dfreq_gen_dir(root, ngen)
     )
-    spark.read.parquet(*df_paths).groupBy("shingle_h").agg(
-        F.sum("df_inc").alias("df_inc")
-    ).write.mode("overwrite").parquet(_dfreq_gen_dir(root, gen + 1))
     # labels/pairs are already single-generation; carry them over so every
-    # artifact of generation gen+1 is self-contained
+    # artifact of the new generation is self-contained
     spark.read.parquet(_labels_dir(root, gen)).write.mode(
         "overwrite"
-    ).parquet(_labels_dir(root, gen + 1))
+    ).parquet(_labels_dir(root, ngen))
     spark.read.parquet(_pairs_dir(root, gen)).write.mode("overwrite").parquet(
-        _pairs_dir(root, gen + 1)
+        _pairs_dir(root, ngen)
     )
-    _write_state_manifest(
-        root,
-        {
-            **man,
-            "gen": gen + 1,
-            "base_gen": gen + 1,
-            # generations [grace_floor, old base) were superseded by the
-            # PREVIOUS compaction and have now survived one full extra
-            # cycle; the next auto-expiry may delete below the new floor
-            "grace_floor": base,
-            "files": man.get("files", {}),
-        },
-    )
+    # generations [grace_floor, old base) were superseded by the PREVIOUS
+    # compaction and have now survived one full extra cycle
+    return {"grace_floor": base}
 
 
 def expire_dedup_state(root: str) -> list:
@@ -1962,48 +1846,30 @@ def expire_dedup_state(root: str) -> list:
     ``dedup_labels_delta_audit`` serve from, the current generation is
     what every other consumer reads. Everything else (compacted-away
     gens, intermediate labels/pairs gens, orphans of crashed writers) is
-    deleted. Returns the deleted paths.
-
-    Runs under the maintenance lease: 'orphan above gen' is only safely
-    deletable when no writer is mid-stage — a concurrent maintainer's
-    freshly staged (not yet committed) gen+1 files look exactly like a
-    crashed writer's orphans, and deleting them between its parquet
-    write and its manifest commit would publish a manifest pointing at
-    missing files."""
-    from ..state import maintenance_lease
-
-    with maintenance_lease(root):
-        return _expire_dedup_state_locked(root)
+    deleted. Returns the deleted paths. Runs under the maintenance
+    lease."""
+    return _labels_state(None, root).expire()
 
 
-def _expire_dedup_state_locked(root: str, floor: int | None = None) -> list:
-    """Body of :func:`expire_dedup_state`; caller holds the lease.
-
-    ``floor`` widens the keep set downward for the auto-compaction path:
-    index/df-log generations in ``[floor, base_gen)`` — superseded by the
-    MOST RECENT compaction — are kept one extra compaction cycle so a
-    DataFrame returned before that compaction can still materialize
-    lazily; only generations below ``floor`` (superseded two compactions
-    ago) are deleted. ``floor=None`` is the manual aggressive form
-    (keep exactly the manifest-reachable set)."""
+def _expire_flat_labels(
+    root: str, man: dict, lo: int, floor: int | None
+) -> list:
+    """The labels/pairs half of expiry (flat ``labels_g<g>`` /
+    ``pairs_g<g>`` dirs): keep generation 0, the current one and, on the
+    auto-compaction path (``floor`` set), everything from ``lo`` up — the
+    generations superseded only by the MOST RECENT compaction survive one
+    extra cycle so a DataFrame returned before it can still
+    materialize."""
     import os
     import re
     import shutil
 
-    from ..state import expire_generations
-
-    man = _state_manifest(root)
-    if man is None:
-        raise ValueError(f"no labels state at {root}; nothing to expire")
-    gen = man["gen"]
-    lo = man.get("base_gen", 0) if floor is None else min(floor, gen)
-    live = set(range(lo, gen + 1))
-    deleted = expire_generations(root, {"index": live, "dfreq": live})
+    deleted = []
     flat = re.compile(r"^(labels|pairs)_g(\d+)$")
     for name in os.listdir(root):
         m = flat.match(name)
         g = int(m.group(2)) if m else None
-        if m and g != 0 and g != gen and not (floor is not None and g >= lo):
+        if m and g != 0 and g != man["gen"] and not (floor is not None and g >= lo):
             p = os.path.join(root, name)
             shutil.rmtree(p, ignore_errors=True)
             deleted.append(p)
@@ -2020,31 +1886,22 @@ def ensure_dedup_table(spark: SparkSession, sf_dir: str) -> DataFrame:
       files present) → O(delta + affected) maintenance over the appended
       rows only (:func:`maintain_dedup_state`) — at 100 TB the rebuild IS
       the expensive job, and an append must not trigger it;
-    * anything else (rewritten/deleted file) → full rebuild.
+    * anything else (rewritten/deleted file, or a single-file corpus,
+      which cannot grow by append) → full rebuild.
     """
     import os
 
-    from ..state import snapshot_delta
-
     src = os.path.join(sf_dir, "documents.parquet")
     root = dedup_table_path(sf_dir)
-    cur = _corpus_snapshot(src)
-    man = _state_manifest(root)
-    if man is not None:
-        old = man.get("files", {})
-        kind, new_rel = snapshot_delta(old, cur)
-        if kind == "unchanged":
-            return spark.read.parquet(_labels_dir(root, man["gen"]))
-        if kind == "appended" and not os.path.isfile(src):
-            # (a single file can't grow by append — rewritten instead)
-            new_files = [os.path.join(src, rel) for rel in new_rel]
-            delta = spark.read.parquet(*new_files).select("doc_id", "text")
-            return maintain_dedup_state(spark, delta, root, files=cur)
     # direct read, not load_table: its per-session relation cache pins the
     # file listing at first touch, which would make a rebuild after a
     # corpus change scan the OLD file set
-    docs = spark.read.parquet(src).select("doc_id", "text")
-    return build_dedup_state(spark, docs, root, files=cur)
+    man = _labels_state(spark, root, lambda: spark.read.parquet(src)).ensure(
+        lambda: _corpus_snapshot(src),
+        lambda new: spark.read.parquet(*[os.path.join(src, f) for f in new]),
+        appendable=not os.path.isfile(src),
+    )
+    return spark.read.parquet(_labels_dir(root, man["gen"]))
 
 
 @query(

@@ -475,38 +475,6 @@ def graph_link_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _link_jaccard_from_state(pairs: DataFrame, cdeg: DataFrame) -> DataFrame:
-    """Jaccard scoring tail over the state (c1, c2, sdeg, cnt) pair
-    groups + (c, deg) customer degrees — the fold `graph_state._refresh_cp`
-    materializes as the cp_top_jaccard artifact."""
-    agg = pairs.groupBy("c1", "c2").agg(
-        F.sum("cnt").cast("bigint").alias("cn")
-    )
-    return (
-        agg.join(
-            cdeg.select(F.col("c").alias("c1"), F.col("deg").alias("deg1")),
-            "c1",
-        )
-        .join(
-            cdeg.select(F.col("c").alias("c2"), F.col("deg").alias("deg2")),
-            "c2",
-        )
-        .select(
-            "c1",
-            "c2",
-            "cn",
-            "deg1",
-            "deg2",
-            (
-                F.col("cn").cast("double")
-                / (F.col("deg1") + F.col("deg2") - F.col("cn"))
-            ).alias("jaccard"),
-        )
-        .orderBy(F.col("jaccard").desc(), "c1", "c2")
-        .limit(LINK_TOP)
-    )
-
-
 # ------------------------------------------------ degree assortativity -----
 #
 # Degree assortativity (Newman 2002): the Pearson correlation of the
@@ -890,34 +858,6 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     root, man = ensure_graph_state(spark, sf_dir, need=("cp_top",))
     return read_artifact(spark, root, man, "cp_top_ra").orderBy(
         F.col("ra_scaled").desc(), "c1", "c2"
-    )
-
-
-def _link_ra_from_state(pairs: DataFrame) -> DataFrame:
-    """RA scoring tail over the state pair groups: sum cnt*w(sdeg) is
-    integer-identical to summing per-part weights directly. Materialized
-    as cp_top_ra by `graph_state._refresh_cp`."""
-    agg = (
-        pairs.withColumn(
-            "w",
-            F.round(F.lit(RA_SCALE) / F.col("sdeg")).cast("bigint"),
-        )
-        .groupBy("c1", "c2")
-        .agg(
-            F.sum("cnt").cast("bigint").alias("cn"),
-            F.sum(F.col("cnt") * F.col("w")).cast("bigint").alias("ra_scaled"),
-        )
-    )
-    return (
-        agg.select(
-            "c1",
-            "c2",
-            "cn",
-            "ra_scaled",
-            (F.col("ra_scaled").cast("double") / F.lit(RA_SCALE)).alias("ra"),
-        )
-        .orderBy(F.col("ra_scaled").desc(), "c1", "c2")
-        .limit(LINK_TOP)
     )
 
 
@@ -1331,39 +1271,6 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     root, man = ensure_graph_state(spark, sf_dir, need=("cp_top",))
     return read_artifact(spark, root, man, "cp_top_aa").orderBy(
         F.col("aa_scaled").desc(), "c1", "c2"
-    )
-
-
-def _link_aa_from_state(pairs: DataFrame) -> DataFrame:
-    """Adamic-Adar scoring tail over the state pair groups (Mitchell-log
-    weight over the sdeg column, 2..LINK_DEG_CAP by construction).
-    Materialized as cp_top_aa by `graph_state._refresh_cp`."""
-    agg = (
-        pairs.withColumn(
-            "w",
-            F.expr(
-                f"CAST(round({AA_SCALE} * 1000000.0 / {_MLOG_DEG_SPARK})"
-                " AS BIGINT)"
-            ),
-        )
-        .groupBy("c1", "c2")
-        .agg(
-            F.sum("cnt").cast("bigint").alias("cn"),
-            F.sum(F.col("cnt") * F.col("w")).cast("bigint").alias("aa_scaled"),
-        )
-    )
-    return (
-        agg.select(
-            "c1",
-            "c2",
-            "cn",
-            "aa_scaled",
-            (F.col("aa_scaled").cast("double") / F.lit(AA_SCALE)).alias(
-                "adamic_adar"
-            ),
-        )
-        .orderBy(F.col("aa_scaled").desc(), "c1", "c2")
-        .limit(LINK_TOP)
     )
 
 

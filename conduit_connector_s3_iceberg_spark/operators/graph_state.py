@@ -76,24 +76,21 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..state import (
+    FoldDeclined,
+    StateRoot,
     corpus_snapshot,
     expire_generations,
     gen_dir,
     gen_paths,
-    maintenance_lease,
-    read_manifest,
-    snapshot_delta,
     write_manifest,
 )
 
 GRAPH_STATE_VERSION = 5  # v5: adjustment-append cp artifacts + deferred refresh
-GRAPH_AUTO_COMPACT_GENS = 8  # same policy as the dedup/ANN roots
 
 # part-hash bucket count for the cp_edges partition layout. Maintenance
 # reads of the STANDING cp set (replay anti-join, touched-part member
@@ -430,7 +427,7 @@ def _refresh_cp_top(
     aa.write.mode("overwrite").parquet(gen_dir(root, "cp_top_aa", at_gen))
 
 
-def _refresh_locked(
+def _refresh(
     spark: SparkSession, root: str, man: dict, need: tuple[str, ...]
 ) -> dict:
     """Refresh whichever needed derived families are stale (caller holds
@@ -463,11 +460,10 @@ def refresh_graph_state(spark: SparkSession, root: str) -> dict:
     SLA instead of paying the O(graph) refresh on every append; readers
     that cannot tolerate staleness get the same refresh implicitly via
     ``ensure_graph_state(..., need=...)``."""
-    with maintenance_lease(root):
-        man = read_manifest(root)
-        if man is None:
-            raise ValueError(f"no graph state at {root}")
-        return _refresh_locked(spark, root, man, ("fix", "cp_top"))
+    return _graph_state(spark, root).run(
+        lambda man: _refresh(spark, root, man, ("fix", "cp_top")),
+        hint="",
+    )
 
 
 def _commit_and_expire(root: str, man: dict) -> dict:
@@ -574,14 +570,10 @@ def _stage_cp_adjustments(
     ).write.mode("overwrite").parquet(gen_dir(root, "cp_cdeg", gen))
 
 
-def _build_locked(
-    spark: SparkSession, sf_dir: str, root: str, files: dict
-) -> dict:
+def _build(spark: SparkSession, sf_dir: str, root: str) -> dict:
     """Full rebuild: okc + distinct customer–supplier and customer–part
     edges from the corpus, fixpoints + co-purchase derivations + result
     tables, gen 0 manifest (everything fresh)."""
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     okc = orders.select(
@@ -624,21 +616,14 @@ def _build_locked(
         "cp_fix_gen": 0,
         "edges_grew_gen": 0,
         "cp_grew_gen": 0,
-        "files": files,
     }
     _refresh_cp_top(spark, root, man0, 0)
-    return _commit_and_expire(root, man0)
+    return man0
 
 
-def _apply_graph_delta_locked(
-    spark: SparkSession,
-    root: str,
-    man: dict,
-    d_okc: DataFrame,
-    d_li: DataFrame,
-    files: dict,
-) -> tuple[dict | None, str | None]:
-    """O(delta)+O(touched) append (caller holds the lease): new okc rows
+def _fold(spark: SparkSession, root: str, man: dict, delta) -> dict:
+    """O(delta)+O(touched) append (caller holds the lease) of ``delta``
+    = (order rows (okey, ck), lineitem rows (okey, sk, pk)): new okc rows
     from the delta orders, new edges from delta lineitems joined against
     the ORDER-KEYED STATE (never a standing lineitem table), signed
     cp_pairs/cp_cdeg adjustments from the TOUCHED parts only, staleness
@@ -646,13 +631,14 @@ def _apply_graph_delta_locked(
     appends anti-join the standing state, duplicate delta rows collapse
     before staging, and a crashed maintenance's generation files stay
     invisible until the manifest commit (the retry overwrites them).
-    Returns ``(manifest, None)`` on success or ``(None, reason)`` when a
-    premise broke — an FK orphan (delta lineitems resolving through no
-    order) or an update-shaped order row (one okey carrying two distinct
-    ck values, within the delta or vs the standing map: the okc state is
-    insert-only, so a changed FK cannot be appended). The caller decides
-    whether to degrade to a full rebuild (file path) or to raise (stream
-    path, which has no corpus to rebuild from)."""
+    Raises :class:`state.FoldDeclined` when a premise broke — an FK
+    orphan (delta lineitems resolving through no order) or an
+    update-shaped order row (one okey carrying two distinct ck values,
+    within the delta or vs the standing map: the okc state is
+    insert-only, so a changed FK cannot be appended); the file path then
+    degrades to a full rebuild and the stream path, which has no corpus
+    to rebuild from, raises."""
+    d_okc, d_li = delta
     gen = man["gen"] + 1
 
     standing_okc = _read_append_kind(spark, root, man, "okc")
@@ -664,7 +650,7 @@ def _apply_graph_delta_locked(
     if not d0.groupBy("okey").agg(
         F.count(F.lit(1)).alias("n")
     ).filter("n > 1").isEmpty():
-        return None, (
+        raise FoldDeclined(
             "update-shaped delta: one okey carries two distinct ck values "
             "within the batch — the okc map is insert-only"
         )
@@ -676,7 +662,7 @@ def _apply_graph_delta_locked(
     if not joined.filter(
         F.col("old_ck").isNotNull() & (F.col("old_ck") != F.col("ck"))
     ).isEmpty():
-        return None, (
+        raise FoldDeclined(
             "update-shaped delta: an okey matches the standing okc map "
             "with a DIFFERENT ck — the okc state is insert-only"
         )
@@ -691,7 +677,7 @@ def _apply_graph_delta_locked(
     if not d_li.select("okey", "sk").join(
         okc_all, "okey", "left_anti"
     ).isEmpty():
-        return None, (
+        raise FoldDeclined(
             "delta lineitems reference orders in neither the delta nor "
             "the standing okc map — graph maintenance requires "
             "FK-complete slices"
@@ -748,8 +734,7 @@ def _apply_graph_delta_locked(
     ).select("c", "s")
     cp_grew = not new_cp_staged.isEmpty()
 
-    man = dict(man)
-    man.update({"gen": gen, "files": files})
+    man = {**man, "gen": gen}
     if edges_grew:
         # fixpoints are now stale; the O(graph) refresh is deferred to
         # the first stale read or the cadence call
@@ -757,54 +742,56 @@ def _apply_graph_delta_locked(
     if cp_grew:
         _stage_cp_adjustments(spark, root, gen, new_cp_staged, standing_pruned)
         man["cp_grew_gen"] = gen
-    man = _commit_and_expire(root, man)
-
-    # auto-compaction: merge append generations past the threshold (the
-    # dedup/ANN policy) — adjustment kinds fold back to true counts —
-    # with expiry via the committed-manifest keep set
-    thresh = int(man.get("auto_compact_gens", GRAPH_AUTO_COMPACT_GENS))
-    if man["gen"] - man.get("base_gen", 0) + 1 > thresh:
-        ngen = man["gen"] + 1
-        for kind in ("edges", "okc"):
-            _read_append_kind(spark, root, man, kind).write.mode(
-                "overwrite"
-            ).parquet(gen_dir(root, kind, ngen))
-        _write_cp_edges(
-            _read_append_kind(spark, root, man, "cp_edges").select("c", "s"),
-            gen_dir(root, "cp_edges", ngen),
-        )
-        for kind in _ADJ_KINDS:
-            _read_adj_kind(spark, root, man, kind).write.mode(
-                "overwrite"
-            ).parquet(gen_dir(root, kind, ngen))
-        man = dict(man)
-        man.update({"gen": ngen, "base_gen": ngen})
-        man = _commit_and_expire(root, man)
-    return man, None
+    return man
 
 
-def _maintain_locked(
-    spark: SparkSession,
-    sf_dir: str,
-    root: str,
-    man: dict,
-    files: dict,
-    new_rel: list[str],
-) -> dict:
-    """File-driven maintenance: read ONLY the appended corpus files,
-    then apply the row-level delta. Audit failure (FK orphan or an
-    update-shaped order row) degrades to a correctness-preserving full
-    rebuild — the rebuild reproduces exactly what the from-scratch
-    oracles compute over the same corpus bytes."""
+def _compact(spark: SparkSession, root: str, man: dict, ngen: int) -> None:
+    """Merge the append generations past the threshold; the adjustment
+    kinds fold back to true counts. Expiry runs in the commit
+    (:func:`_commit_and_expire`), with no grace for append kinds."""
+    for kind in ("edges", "okc"):
+        _read_append_kind(spark, root, man, kind).write.mode(
+            "overwrite"
+        ).parquet(gen_dir(root, kind, ngen))
+    _write_cp_edges(
+        _read_append_kind(spark, root, man, "cp_edges").select("c", "s"),
+        gen_dir(root, "cp_edges", ngen),
+    )
+    for kind in _ADJ_KINDS:
+        _read_adj_kind(spark, root, man, kind).write.mode(
+            "overwrite"
+        ).parquet(gen_dir(root, kind, ngen))
+
+
+def _graph_state(
+    spark: SparkSession, root: str, sf_dir: str | None = None
+) -> StateRoot:
+    """The graph family on the shared ``state.StateRoot`` lifecycle;
+    every commit also expires what the manifest no longer reaches."""
+    return StateRoot(
+        root,
+        "graph state",
+        build=lambda: _build(spark, sf_dir, root),
+        fold=lambda man, delta: _fold(spark, root, man, delta),
+        compact=lambda man, ngen: _compact(spark, root, man, ngen),
+        commit=lambda man: _commit_and_expire(root, man),
+        hint="run ensure_graph_state first",
+    )
+
+
+def _read_file_delta(
+    spark: SparkSession, sf_dir: str, new_rel: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """The file path's delta: ONLY the appended corpus files, read as the
+    row-level (order, lineitem) frames."""
     delta = _delta_files(sf_dir, new_rel)
-    standing_okc = _read_append_kind(spark, root, man, "okc")
     if delta["orders"]:
         d_okc = spark.read.parquet(*delta["orders"]).select(
             F.col("o_orderkey").cast("bigint").alias("okey"),
             F.col("o_custkey").cast("bigint").alias("ck"),
         )
     else:
-        d_okc = standing_okc.limit(0)
+        d_okc = spark.createDataFrame([], "okey bigint, ck bigint")
     if delta["lineitem"]:
         d_li = spark.read.parquet(*delta["lineitem"]).select(
             F.col("l_orderkey").cast("bigint").alias("okey"),
@@ -813,10 +800,7 @@ def _maintain_locked(
         )
     else:
         d_li = spark.createDataFrame([], "okey bigint, sk bigint, pk bigint")
-    out, err = _apply_graph_delta_locked(spark, root, man, d_okc, d_li, files)
-    if err is not None:
-        return _build_locked(spark, sf_dir, root, files)
-    return out
+    return d_okc, d_li
 
 
 def maintain_graph_delta(
@@ -837,19 +821,7 @@ def maintain_graph_delta(
     recorded and the refresh runs on the consumer's first stale read or
     on the :func:`refresh_graph_state` cadence, so per-epoch cost stays
     delta-proportional no matter how large the standing graph is."""
-    with maintenance_lease(root):
-        man = read_manifest(root)
-        if man is None:
-            raise ValueError(
-                f"no graph state at {root}; run ensure_graph_state first"
-            )
-        out, err = _apply_graph_delta_locked(
-            spark, root, man, delta_orders, delta_lineitems,
-            man.get("files", {}),
-        )
-        if err is not None:
-            raise ValueError(err)
-        return out
+    return _graph_state(spark, root).maintain((delta_orders, delta_lineitems))
 
 
 def ensure_graph_state(
@@ -860,28 +832,18 @@ def ensure_graph_state(
     derived-artifact family named in ``need`` ('fix' = cs fixpoints,
     'cp_top' = link-prediction tables) that is stale. Returns (root,
     manifest). Fast path takes no lock when the committed state is fresh
-    for the snapshot AND for every needed family."""
+    for the snapshot AND for every needed family. A file-path delta whose
+    FK audit fails degrades to a correctness-preserving full rebuild —
+    the rebuild reproduces exactly what the from-scratch oracles compute
+    over the same corpus bytes."""
     root = graph_state_path(sf_dir)
-    man = read_manifest(root)
-    cur = _graph_snapshot(sf_dir)
-    if (
-        man is not None
-        and snapshot_delta(man["files"], cur)[0] == "unchanged"
-        and not _stale(man, need)
-    ):
-        return root, man
-    with maintenance_lease(root):
-        man = read_manifest(root)  # re-read under the lease
-        cur = _graph_snapshot(sf_dir)
-        if man is not None:
-            kind, new_rel = snapshot_delta(man["files"], cur)
-            if kind == "appended":
-                man = _maintain_locked(spark, sf_dir, root, man, cur, new_rel)
-            elif kind != "unchanged":
-                man = _build_locked(spark, sf_dir, root, cur)
-        else:
-            man = _build_locked(spark, sf_dir, root, cur)
-        return root, _refresh_locked(spark, root, man, need)
+    man = _graph_state(spark, root, sf_dir).ensure(
+        lambda: _graph_snapshot(sf_dir),
+        lambda new_rel: _read_file_delta(spark, sf_dir, new_rel),
+        stale=lambda man: bool(_stale(man, need)),
+        refresh=lambda man: _refresh(spark, root, man, need),
+    )
+    return root, man
 
 
 def serve_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -45,18 +45,17 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
 from ..state import (
+    FoldDeclined,
+    StateRoot,
     corpus_snapshot,
+    expire_generations,
     gen_dir,
-    maintenance_lease,
-    read_manifest,
-    snapshot_delta,
     write_manifest,
 )
 
@@ -129,33 +128,17 @@ def _rank_topk(scored: DataFrame, base: DataFrame | None = None) -> DataFrame:
     return two_phase(scored, k, base=base)
 
 
-def _stage_and_commit(
-    spark: SparkSession,
-    root: str,
-    man: dict,
-    gen: int,
-    merged_scores: DataFrame,
-    probes: DataFrame,
-    files,
-) -> dict:
-    """Stage topk + probes under ``gen``, commit, expire with one-cycle
-    grace (lock-free readers holding the previous manifest survive)."""
-    _rank_topk(merged_scores).write.mode("overwrite").parquet(
-        gen_dir(root, "topk", gen)
-    )
-    probes.write.mode("overwrite").parquet(gen_dir(root, "probes", gen))
-    man = write_manifest(root, {**man, "gen": gen, "files": files})
-    keep = {max(0, gen - 1), gen}
-    from ..state import expire_generations
-
+def _commit(root: str, man: dict) -> dict:
+    """Commit, then expire with one-cycle grace (lock-free readers
+    holding the previous manifest survive)."""
+    man = write_manifest(root, man)
+    keep = {max(0, man["gen"] - 1), man["gen"]}
     expire_generations(root, {"topk": keep, "probes": keep})
     return man
 
 
-def _build_locked(spark: SparkSession, sf_dir: str, root: str, files) -> dict:
+def _build(spark: SparkSession, sf_dir: str, root: str) -> dict:
     src = os.path.join(sf_dir, "embeddings.parquet")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
     emb = _emb_frame(spark.read.parquet(src)).localCheckpoint(eager=False)
     q = _queries_of(emb)
     _rank_topk(_scored(emb, q), base=emb).write.mode("overwrite").parquet(
@@ -166,20 +149,14 @@ def _build_locked(spark: SparkSession, sf_dir: str, root: str, files) -> dict:
     # append path never re-reads the standing corpus, and the streaming
     # twin needs no corpus at all
     q.write.mode("overwrite").parquet(gen_dir(root, "probes", 0))
-    return write_manifest(root, {"gen": 0, "files": files})
+    return {"gen": 0}
 
 
-def _apply_gt_delta_locked(
-    spark: SparkSession,
-    root: str,
-    man: dict,
-    delta: DataFrame,
-    files,
-    corpus_df: DataFrame | None = None,
-) -> tuple[dict | None, str | None]:
+def _fold(spark: SparkSession, root: str, man: dict, delta_in) -> dict:
     """Merge an append-only delta of (vec_id, emb, nrm) vectors into the
-    standing truth (caller holds the lease). O(delta · queries): deltas
-    are scored against the PERSISTED probe vectors and merged with the
+    standing truth (caller holds the lease); ``delta_in`` is (delta,
+    corpus frame or None). O(delta · queries): deltas are scored
+    against the PERSISTED probe vectors and merged with the
     standing K rows per query — exact because the corpus is append-only
     (scores of standing vectors never change; the cut-off only rises),
     and replay-safe because a re-delivered vector ties its standing copy
@@ -187,10 +164,11 @@ def _apply_gt_delta_locked(
 
     A delta vector that is itself a NEW probe (vec_id < GT_QUERIES)
     needs a full-corpus pass for its own truth rows: the file path
-    passes ``corpus_df`` and pays it for just those queries; the stream
-    path has no corpus and returns ``(None, reason)`` for the caller to
-    raise — the same degrade/enforce split as the graph state's
-    FK-complete-slice contract."""
+    passes the corpus frame and pays it for just those queries; the
+    stream path has no corpus and the fold raises
+    :class:`state.FoldDeclined` — the same degrade/enforce split as the
+    graph state's FK-complete-slice contract."""
+    delta, corpus_df = delta_in
     _, _, _, _, gtq, _ = _defs()
     standing = spark.read.parquet(gen_dir(root, "topk", man["gen"]))
     probes = spark.read.parquet(gen_dir(root, "probes", man["gen"]))
@@ -210,7 +188,7 @@ def _apply_gt_delta_locked(
     ).localCheckpoint(eager=False)
     have_new_probes = not new_q.isEmpty()
     if have_new_probes and corpus_df is None:
-        return None, (
+        raise FoldDeclined(
             "delta introduces new probe ids (vec_id < GT_QUERIES) — "
             "their truth rows need a corpus pass; rebuild via "
             "ensure_gt_topk on the corpus path"
@@ -230,27 +208,27 @@ def _apply_gt_delta_locked(
         .dropDuplicates(["query_id", "vec_id"])
     )
     gen = man["gen"] + 1
-    return (
-        _stage_and_commit(spark, root, man, gen, merged, probes_next, files),
-        None,
+    _rank_topk(merged).write.mode("overwrite").parquet(
+        gen_dir(root, "topk", gen)
     )
+    probes_next.write.mode("overwrite").parquet(gen_dir(root, "probes", gen))
+    return {**man, "gen": gen}
 
 
-def _maintain_locked(
-    spark: SparkSession, sf_dir: str, root: str, man: dict,
-    files: dict, new_rel: list[str],
-) -> dict:
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    delta = _emb_frame(
-        spark.read.parquet(*[os.path.join(src, rel) for rel in new_rel])
-    ).localCheckpoint(eager=False)
-    corpus_df = _emb_frame(spark.read.parquet(src))
-    out, err = _apply_gt_delta_locked(
-        spark, root, man, delta, files, corpus_df=corpus_df
+def _gt_state(
+    spark: SparkSession, root: str, sf_dir: str | None = None
+) -> StateRoot:
+    """The ground-truth family on the shared ``state.StateRoot``
+    lifecycle: single-generation ``topk``/``probes`` artifacts, no
+    compaction."""
+    return StateRoot(
+        root,
+        "ground-truth state",
+        build=lambda: _build(spark, sf_dir, root),
+        fold=lambda man, delta_in: _fold(spark, root, man, delta_in),
+        commit=lambda man: _commit(root, man),
+        hint="run ensure_gt_topk first",
     )
-    if err is not None:  # unreachable with corpus_df, kept for symmetry
-        return _build_locked(spark, sf_dir, root, files)
-    return out
 
 
 def maintain_gt_topk(
@@ -263,22 +241,8 @@ def maintain_gt_topk(
     delta introduces a NEW probe id: a stream has no corpus to derive
     the probe's own truth rows from, so the contract is enforced, not
     degraded."""
-    with maintenance_lease(root):
-        man = read_manifest(root)
-        if man is None:
-            raise ValueError(
-                f"no ground-truth state at {root}; run ensure_gt_topk first"
-            )
-        out, err = _apply_gt_delta_locked(
-            spark,
-            root,
-            man,
-            _emb_frame(delta_emb).localCheckpoint(eager=False),
-            man.get("files", {}),
-        )
-        if err is not None:
-            raise ValueError(err)
-        return out
+    delta = _emb_frame(delta_emb).localCheckpoint(eager=False)
+    return _gt_state(spark, root).maintain((delta, None))
 
 
 def ensure_gt_topk(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
@@ -287,22 +251,19 @@ def ensure_gt_topk(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     takes no lock when the committed state is fresh."""
     src = os.path.join(sf_dir, "embeddings.parquet")
     root = gt_topk_path(sf_dir)
-    man = read_manifest(root)
-    cur = corpus_snapshot(src)
-    if man is not None and snapshot_delta(man["files"], cur)[0] == "unchanged":
-        return root, man
-    with maintenance_lease(root):
-        man = read_manifest(root)
-        cur = corpus_snapshot(src)
-        if man is not None:
-            kind, new_rel = snapshot_delta(man["files"], cur)
-            if kind == "unchanged":
-                return root, man
-            if kind == "appended" and not os.path.isfile(src):
-                return root, _maintain_locked(
-                    spark, sf_dir, root, man, cur, new_rel
-                )
-        return root, _build_locked(spark, sf_dir, root, cur)
+
+    def read_delta(new: list[str]):
+        delta = _emb_frame(
+            spark.read.parquet(*[os.path.join(src, f) for f in new])
+        ).localCheckpoint(eager=False)
+        return delta, _emb_frame(spark.read.parquet(src))
+
+    man = _gt_state(spark, root, sf_dir).ensure(
+        lambda: corpus_snapshot(src),
+        read_delta,
+        appendable=not os.path.isfile(src),
+    )
+    return root, man
 
 
 def serve_gt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

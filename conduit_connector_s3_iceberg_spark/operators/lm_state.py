@@ -50,25 +50,14 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..state import (
-    corpus_snapshot,
-    expire_generations,
-    gen_dir,
-    gen_paths,
-    maintenance_lease,
-    read_manifest,
-    snapshot_delta,
-    write_manifest,
-)
+from ..state import StateRoot, corpus_snapshot, gen_dir, gen_paths
 
 TOKEN_COUNTS_VERSION = 2  # v2: cased artifact pair (uni_c / bi_c)
-TOKEN_AUTO_COMPACT_GENS = 8  # same policy as the dedup/ANN/graph roots
 
 # token array (lowercased, space-split) — the ONE definition every
 # lm-family consumer shares; part of the state key (lm.py / text.py
@@ -175,66 +164,42 @@ def _stage_gen(spark: SparkSession, docs: DataFrame, root: str, gen: int):
     )
 
 
-def _build_locked(
-    spark: SparkSession, docs: DataFrame, root: str, files: dict
-) -> dict:
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    _stage_gen(spark, docs, root, 0)
-    return write_manifest(root, {"gen": 0, "base_gen": 0, "files": files})
+def _token_state(spark: SparkSession, root: str, docs=None) -> StateRoot:
+    """The token-counts family on the shared ``state.StateRoot``
+    lifecycle: four appended kinds staged by one tokenize pass.
+    ``docs`` (a zero-argument callable) supplies the build input.
+    Readers are lock-free — ``ensure_token_counts`` returns (root,
+    manifest) and ``_read_kind`` reads lazily — which is why compaction
+    expires with one cycle of grace."""
 
+    def build() -> dict:
+        _stage_gen(spark, docs().select("doc_id", "text"), root, 0)
+        return {"gen": 0, "base_gen": 0}
 
-def _maintain_locked(
-    spark: SparkSession, delta_docs: DataFrame, root: str, files: dict | None
-) -> dict:
-    man = read_manifest(root)
-    if man is None:
-        raise ValueError(f"no token-counts state at {root}")
-    standing_ids = _read_kind(spark, root, man, "uni").select(
-        "doc_id"
-    ).distinct()
-    # replay-drop: a re-delivered epoch's doc_ids are already in the state
-    delta = delta_docs.select("doc_id", "text").join(
-        standing_ids, "doc_id", "left_anti"
-    )
-    if delta.isEmpty():
-        if files is not None and files != man.get("files"):
-            man = write_manifest(root, {**man, "files": files})
-        return man
-    gen = man["gen"] + 1
-    _stage_gen(spark, delta, root, gen)
-    man = write_manifest(
-        root,
-        {
-            **man,
-            "gen": gen,
-            "files": files if files is not None else man.get("files", {}),
-        },
-    )
-    # auto-compaction with one-cycle grace expiry (the ANN index's
-    # _expire_ann_state_locked discipline): readers are lock-free by
-    # design — ensure_token_counts' fast path returns (root, manifest)
-    # without the lease and _read_kind reads lazily — so a reader
-    # holding a pre-compaction manifest could hit deleted paths if we
-    # expired the just-superseded generations immediately. Instead,
-    # delete only generations below the PREVIOUS compaction's base
-    # (recorded as grace_floor); the immediately-superseded gens
-    # survive one full extra compaction cycle.
-    thresh = int(man.get("auto_compact_gens", TOKEN_AUTO_COMPACT_GENS))
-    if man["gen"] - man.get("base_gen", 0) + 1 > thresh:
-        floor_old = man.get("base_gen", 0)
-        ngen = man["gen"] + 1
+    def fold(man: dict, delta_docs: DataFrame) -> dict:
+        standing_ids = _read_kind(spark, root, man, "uni").select(
+            "doc_id"
+        ).distinct()
+        # replay-drop: a re-delivered epoch's doc_ids are already in the state
+        delta = delta_docs.select("doc_id", "text").join(
+            standing_ids, "doc_id", "left_anti"
+        )
+        if delta.isEmpty():
+            return man
+        _stage_gen(spark, delta, root, man["gen"] + 1)
+        return {**man, "gen": man["gen"] + 1}
+
+    def compact(man: dict, gen: int) -> dict:
         for kind in _KINDS:
             _read_kind(spark, root, man, kind).write.mode(
                 "overwrite"
-            ).parquet(gen_dir(root, kind, ngen))
-        man = write_manifest(
-            root,
-            {**man, "gen": ngen, "base_gen": ngen, "grace_floor": floor_old},
-        )
-        keep = set(range(floor_old, ngen + 1))
-        expire_generations(root, {k: keep for k in _KINDS})
-    return man
+            ).parquet(gen_dir(root, kind, gen))
+        return {"grace_floor": man.get("base_gen", 0)}
+
+    return StateRoot(
+        root, "token-counts state", build=build, fold=fold, compact=compact,
+        kinds=_KINDS,
+    )
 
 
 def maintain_token_counts(
@@ -246,8 +211,7 @@ def maintain_token_counts(
     """Row-level O(delta) maintenance (streaming foreachBatch entry
     point): per-document counts mean the delta only adds rows;
     replay-safe via the doc_id anti-join."""
-    with maintenance_lease(root):
-        return _maintain_locked(spark, delta_docs, root, files)
+    return _token_state(spark, root).maintain(delta_docs, files)
 
 
 def ensure_token_counts(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
@@ -257,28 +221,14 @@ def ensure_token_counts(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     fresh."""
     src = os.path.join(sf_dir, "documents.parquet")
     root = token_counts_path(sf_dir)
-    man = read_manifest(root)
-    cur = corpus_snapshot(src)
-    if man is not None and snapshot_delta(man["files"], cur)[0] == "unchanged":
-        return root, man
-    with maintenance_lease(root):
-        man = read_manifest(root)  # re-read under the lease
-        cur = corpus_snapshot(src)
-        if man is not None:
-            kind, new_rel = snapshot_delta(man["files"], cur)
-            if kind == "unchanged":
-                return root, man
-            if kind == "appended" and not os.path.isfile(src):
-                delta = spark.read.parquet(
-                    *[os.path.join(src, rel) for rel in new_rel]
-                )
-                return root, _maintain_locked(spark, delta, root, cur)
-        # full (re)build — direct read, not load_table (the relation
-        # cache pins file lists and the corpus just changed)
-        docs = spark.read.parquet(src)
-        return root, _build_locked(
-            spark, docs.select("doc_id", "text"), root, cur
-        )
+    # rebuilds read directly, not via load_table (the relation cache pins
+    # file lists and the corpus just changed)
+    man = _token_state(spark, root, lambda: spark.read.parquet(src)).ensure(
+        lambda: corpus_snapshot(src),
+        lambda new: spark.read.parquet(*[os.path.join(src, f) for f in new]),
+        appendable=not os.path.isfile(src),
+    )
+    return root, man
 
 
 def serve_uni(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4182,7 +4182,6 @@ def emb_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the same quantizer — O(delta) maintenance is not an approximation.
 
 SEMDEDUP_STATE_VERSION = 1
-SEMDEDUP_AUTO_COMPACT_GENS = 8
 
 
 def semdedup_state_path(sf_dir: str) -> str:
@@ -4270,46 +4269,6 @@ def _sem_admit(sel: DataFrame, standing: DataFrame | None) -> DataFrame:
     )
 
 
-def ensure_semdedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve the persisted (vec_id, emb, nrm, block, n_earlier, admitted)
-    seen-vector table, building or O(delta)-appending as the corpus
-    snapshot dictates."""
-    import os
-
-    from ..state import (
-        corpus_snapshot,
-        maintenance_lease,
-        read_manifest,
-        snapshot_delta,
-    )
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    root = semdedup_state_path(sf_dir)
-
-    # fast path: no lock taken when the committed state is fresh
-    man = read_manifest(root)
-    cur = corpus_snapshot(src)
-    if man is not None and snapshot_delta(man["files"], cur)[0] == "unchanged":
-        return _read_sem_state(spark, root, man)
-
-    with maintenance_lease(root):
-        man = read_manifest(root)  # re-read under the lease
-        cur = corpus_snapshot(src)
-        if man is not None:
-            kind, new_rel = snapshot_delta(man["files"], cur)
-            if kind == "unchanged":
-                return _read_sem_state(spark, root, man)
-            if kind == "appended" and not os.path.isfile(src):
-                delta = spark.read.parquet(
-                    *[os.path.join(src, rel) for rel in new_rel]
-                ).select("vec_id", "embedding")
-                return _maintain_semdedup_state_locked(
-                    spark, delta, root, files=cur
-                )
-        emb = spark.read.parquet(src).select("vec_id", "embedding")
-        return _build_semdedup_state_locked(spark, sf_dir, emb, root, files=cur)
-
-
 def _sem_prepared(batch: DataFrame, mu: list, nbits: int) -> DataFrame:
     return batch.select(
         "vec_id",
@@ -4323,29 +4282,71 @@ def _sem_prepared(batch: DataFrame, mu: list, nbits: int) -> DataFrame:
     )
 
 
-def _build_semdedup_state_locked(
-    spark: SparkSession,
-    sf_dir: str,
-    emb: DataFrame,
-    root: str,
-    files: dict | None = None,
-) -> DataFrame:
+def _semdedup_state(spark: SparkSession, root: str, sf_dir: str | None = None):
+    """The semdedup family on the shared ``state.StateRoot`` lifecycle:
+    one appended, block-partitioned ``seen`` kind; the build freezes the
+    quantizer of the corpus at ``sf_dir`` into the manifest."""
     import os
-    import shutil
 
-    from ..state import gen_dir, write_manifest
+    from ..state import StateRoot, gen_dir
 
-    mu, nbits = sem_quantizer_stats(spark, sf_dir)
-    sel = _sem_prepared(emb, mu, nbits).localCheckpoint(eager=False)
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    _sem_admit(sel, None).write.mode("overwrite").partitionBy(
-        "block"
-    ).parquet(gen_dir(root, "seen", 0))
-    man = write_manifest(
-        root,
-        {"gen": 0, "base_gen": 0, "files": files or {}, "mu": mu,
-         "nbits": nbits},
+    def build() -> dict:
+        src = os.path.join(sf_dir, "embeddings.parquet")
+        emb = spark.read.parquet(src).select("vec_id", "embedding")
+        mu, nbits = sem_quantizer_stats(spark, sf_dir)
+        sel = _sem_prepared(emb, mu, nbits).localCheckpoint(eager=False)
+        _sem_admit(sel, None).write.mode("overwrite").partitionBy(
+            "block"
+        ).parquet(gen_dir(root, "seen", 0))
+        return {"gen": 0, "base_gen": 0, "mu": mu, "nbits": nbits}
+
+    def fold(man: dict, delta_emb: DataFrame) -> dict:
+        standing = _read_sem_state(spark, root, man)
+        sel = _sem_prepared(
+            delta_emb.select("vec_id", "embedding"),
+            man["mu"],
+            int(man["nbits"]),
+        ).join(  # replay-drop: re-delivered vec_ids are already in the state
+            standing.select("vec_id").distinct(), "vec_id", "left_anti"
+        ).localCheckpoint(eager=False)
+        if sel.isEmpty():
+            return man
+        # bounded metadata collect: the delta's distinct blocks prune the
+        # standing scan to the touched partitions
+        blocks = [
+            int(r["block"]) for r in sel.select("block").distinct().collect()
+        ]
+        pruned = standing.filter(F.col("block").isin(blocks))
+        _sem_admit(sel, pruned).write.mode("overwrite").partitionBy(
+            "block"
+        ).parquet(gen_dir(root, "seen", man["gen"] + 1))
+        return {**man, "gen": man["gen"] + 1}
+
+    def compact(man: dict, gen: int) -> None:
+        _read_sem_state(spark, root, man).write.mode("overwrite").partitionBy(
+            "block"
+        ).parquet(gen_dir(root, "seen", gen))
+
+    return StateRoot(
+        root, "semdedup state", build=build, fold=fold, compact=compact,
+        kinds=("seen",), hint="run ensure_semdedup_state",
+    )
+
+
+def ensure_semdedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Serve the persisted (vec_id, emb, nrm, block, n_earlier, admitted)
+    seen-vector table, building or O(delta)-appending as the corpus
+    snapshot dictates."""
+    import os
+
+    from ..state import corpus_snapshot
+
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    root = semdedup_state_path(sf_dir)
+    man = _semdedup_state(spark, root, sf_dir).ensure(
+        lambda: corpus_snapshot(src),
+        lambda new: spark.read.parquet(*[os.path.join(src, f) for f in new]),
+        appendable=not os.path.isfile(src),
     )
     return _read_sem_state(spark, root, man)
 
@@ -4362,74 +4363,7 @@ def maintain_semdedup_state(
     or rescored. Replay-safe: vec_ids already in the state are dropped,
     and a crashed epoch's generation files stay invisible until the
     manifest commit."""
-    from ..state import maintenance_lease
-
-    with maintenance_lease(root):
-        return _maintain_semdedup_state_locked(spark, delta_emb, root, files)
-
-
-def _maintain_semdedup_state_locked(
-    spark: SparkSession,
-    delta_emb: DataFrame,
-    root: str,
-    files: dict | None = None,
-) -> DataFrame:
-    from ..state import (
-        expire_generations,
-        gen_dir,
-        read_manifest,
-        write_manifest,
-    )
-
-    man = read_manifest(root)
-    if man is None:
-        raise ValueError(
-            f"no semdedup state at {root}; run ensure_semdedup_state"
-        )
-    standing = _read_sem_state(spark, root, man)
-    sel = _sem_prepared(
-        delta_emb.select("vec_id", "embedding"),
-        man["mu"],
-        int(man["nbits"]),
-    ).join(  # replay-drop: re-delivered vec_ids are already in the state
-        standing.select("vec_id").distinct(), "vec_id", "left_anti"
-    ).localCheckpoint(eager=False)
-    if sel.isEmpty():
-        if files is not None and files != man.get("files"):
-            man = write_manifest(root, {**man, "files": files})
-        return _read_sem_state(spark, root, man)
-    # bounded metadata collect: the delta's distinct blocks prune the
-    # standing scan to the touched partitions
-    blocks = [
-        int(r["block"]) for r in sel.select("block").distinct().collect()
-    ]
-    pruned = standing.filter(F.col("block").isin(blocks))
-    gen = man["gen"]
-    _sem_admit(sel, pruned).write.mode("overwrite").partitionBy(
-        "block"
-    ).parquet(gen_dir(root, "seen", gen + 1))
-    man = write_manifest(
-        root,
-        {
-            **man,
-            "gen": gen + 1,
-            "files": files if files is not None else man.get("files", {}),
-        },
-    )
-    # auto-compaction, same policy as labels/ANN/counts
-    thresh = int(man.get("auto_compact_gens", SEMDEDUP_AUTO_COMPACT_GENS))
-    if man["gen"] - man.get("base_gen", 0) + 1 > thresh:
-        floor_old = int(man.get("base_gen", 0))
-        _read_sem_state(spark, root, man).write.mode(
-            "overwrite"
-        ).partitionBy("block").parquet(gen_dir(root, "seen", man["gen"] + 1))
-        man = write_manifest(
-            root,
-            {**man, "gen": man["gen"] + 1, "base_gen": man["gen"] + 1},
-        )
-        expire_generations(
-            root, {"seen": set(range(floor_old, man["gen"] + 1))}
-        )
+    man = _semdedup_state(spark, root).maintain(delta_emb, files)
     return _read_sem_state(spark, root, man)
 
 
@@ -5805,116 +5739,92 @@ def ensure_ann_index(
     Concurrent writers serialize on the root's maintenance lease (r8
     verdict item): without it, two maintainers staging ``gen+1``
     simultaneously overwrite each other's staged cells, and the loser's
-    manifest commit last-writer-wins away the winner's generation."""
+    manifest commit last-writer-wins away the winner's generation.
+    Readers never take the lease: a fresh index serves lock-free."""
     import os
-    import shutil
 
-    from ..state import (
-        corpus_snapshot,
-        gen_dir,
-        maintenance_lease,
-        read_manifest,
-        snapshot_delta,
-        write_manifest,
-    )
-
-    root = ann_index_path(sf_dir, mode)
-    with maintenance_lease(root):
-        return _ensure_ann_index_locked(spark, sf_dir, mode, root)
-
-
-def _ensure_ann_index_locked(
-    spark: SparkSession, sf_dir: str, mode: str, root: str
-) -> DataFrame:
-    import os
-    import shutil
-
-    from ..state import (
-        corpus_snapshot,
-        gen_dir,
-        read_manifest,
-        snapshot_delta,
-        write_manifest,
-    )
+    from ..state import corpus_snapshot
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    snap = corpus_snapshot(src)
-    man = read_manifest(root)
-    if man is not None and "gen" not in man:
-        man = None  # pre-v2 flat layout — rebuild under the new protocol
-
-    if man is not None:
-        kind, new_files = snapshot_delta(man["snapshot"], snap)
-        if kind == "unchanged":
-            return _read_ann_cells(spark, root, man)  # serve
-        if kind == "appended" and not os.path.isfile(src):
-            # append path: assign ONLY the new files' rows (against the
-            # frozen manifest centroids in trained mode), staged as
-            # generation gen+1, committed by the manifest replace
-            gen = man["gen"]
-            delta = spark.read.parquet(
-                *[os.path.join(src, f) for f in new_files]
-            ).select("vec_id", "embedding")
-            _assign_cells(delta, man.get("centroids")).write.mode(
-                "overwrite"
-            ).partitionBy("cell").parquet(gen_dir(root, "cells", gen + 1))
-            man = {
-                **man,
-                "gen": gen + 1,
-                "base_gen": man.get("base_gen", 0),
-                "snapshot": snap,
-                "appended": True,
-            }
-            man = write_manifest(root, man)
-            out = _read_ann_cells(spark, root, man)
-            # auto-compaction: same policy as the dedup labels state —
-            # when the live cell-generation width exceeds the manifest
-            # threshold, merge inside the already-held lease and expire
-            # only generations superseded two compactions ago (grace
-            # window for lazily-held reader DataFrames)
-            thresh = int(man.get("auto_compact_gens", ANN_AUTO_COMPACT_GENS))
-            if man["gen"] - man.get("base_gen", 0) + 1 > thresh:
-                # one-cycle grace: delete only generations below the
-                # PRE-compaction base (superseded by the previous
-                # compaction, survived one full extra cycle)
-                floor_old = int(man.get("base_gen", 0))
-                _compact_ann_index_locked(spark, root)
-                _expire_ann_state_locked(root, floor=floor_old)
-                man = read_manifest(root)
-                out = _read_ann_cells(spark, root, man)
-            return out
-
-    # full (re)build — direct read, NOT load_table: its resolved-relation
-    # cache assumes immutable tables, and a rebuild exists precisely
-    # because the corpus changed
-    emb = spark.read.parquet(src).select("vec_id", "embedding")
-    cents, train_meta = None, {}
-    if mode == "trained":
-        cents = train_ivf_centroids(spark, emb)
-    elif mode == "trained_multi":
-        # iterate-to-epsilon Lloyd (bounded); manifest records the full
-        # convergence history — trace AND per-iteration centroid
-        # snapshots (K x DIM metadata per round), so rebuild keys, the
-        # audit, and state-served re-verification all see it
-        seeds = seed_ivf_centroids(spark, emb)
-        cents, trace, hist = train_ivf_centroids_multi(spark, emb, seeds)
-        train_meta = {
-            "train_iters": len(trace),
-            "movement_trace": trace,
-            "train_history": hist,
-            "train_seeds": seeds,
-        }
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    _assign_cells(emb, cents).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(gen_dir(root, "cells", 0))
-    man = {"gen": 0, "base_gen": 0, "snapshot": snap, "appended": False}
-    if cents is not None:
-        man["centroids"] = cents
-    man.update(train_meta)
-    write_manifest(root, man)
+    root = ann_index_path(sf_dir, mode)
+    man = _ann_state(spark, root, sf_dir, mode).ensure(
+        lambda: corpus_snapshot(src),
+        lambda new: spark.read.parquet(*[os.path.join(src, f) for f in new]),
+        appendable=not os.path.isfile(src),
+    )
     return _read_ann_cells(spark, root, man)
+
+
+def _ann_state(
+    spark: SparkSession,
+    root: str,
+    sf_dir: str | None = None,
+    mode: str = "static",
+):
+    """The ANN index family on the shared ``state.StateRoot`` lifecycle:
+    one appended, cell-partitioned ``cells`` kind, the source snapshot
+    under the manifest key ``snapshot``."""
+    import os
+
+    from ..state import StateRoot, gen_dir
+
+    def build() -> dict:
+        # direct read, NOT load_table: its resolved-relation cache assumes
+        # immutable tables, and a rebuild exists precisely because the
+        # corpus changed
+        src = os.path.join(sf_dir, "embeddings.parquet")
+        emb = spark.read.parquet(src).select("vec_id", "embedding")
+        cents, train_meta = None, {}
+        if mode == "trained":
+            cents = train_ivf_centroids(spark, emb)
+        elif mode == "trained_multi":
+            # iterate-to-epsilon Lloyd (bounded); manifest records the full
+            # convergence history — trace AND per-iteration centroid
+            # snapshots (K x DIM metadata per round), so rebuild keys, the
+            # audit, and state-served re-verification all see it
+            seeds = seed_ivf_centroids(spark, emb)
+            cents, trace, hist = train_ivf_centroids_multi(spark, emb, seeds)
+            train_meta = {
+                "train_iters": len(trace),
+                "movement_trace": trace,
+                "train_history": hist,
+                "train_seeds": seeds,
+            }
+        _assign_cells(emb, cents).write.mode("overwrite").partitionBy(
+            "cell"
+        ).parquet(gen_dir(root, "cells", 0))
+        man = {"gen": 0, "base_gen": 0, "appended": False}
+        if cents is not None:
+            man["centroids"] = cents
+        man.update(train_meta)
+        return man
+
+    def fold(man: dict, delta: DataFrame) -> dict:
+        # assign ONLY the new rows (against the frozen manifest centroids
+        # in trained mode), staged as generation gen+1
+        gen = man["gen"]
+        _assign_cells(
+            delta.select("vec_id", "embedding"), man.get("centroids")
+        ).write.mode("overwrite").partitionBy("cell").parquet(
+            gen_dir(root, "cells", gen + 1)
+        )
+        return {
+            **man,
+            "gen": gen + 1,
+            "base_gen": man.get("base_gen", 0),
+            "appended": True,
+        }
+
+    def compact(man: dict, gen: int) -> dict:
+        _read_ann_cells(spark, root, man).write.mode("overwrite").partitionBy(
+            "cell"
+        ).parquet(gen_dir(root, "cells", gen))
+        return {"grace_floor": man.get("base_gen", 0)}
+
+    return StateRoot(
+        root, "ANN index", build=build, fold=fold, compact=compact,
+        kinds=("cells",), snapshot_key="snapshot", hint="run ensure_ann_index",
+    )
 
 
 def compact_ann_index(spark: SparkSession, root: str) -> None:
@@ -5924,31 +5834,7 @@ def compact_ann_index(spark: SparkSession, root: str) -> None:
     ``compact_dedup_state``; run ``expire_ann_state`` afterwards to
     reclaim the superseded generation directories. Serializes on the
     root's maintenance lease like every other ANN writer."""
-    from ..state import maintenance_lease
-
-    with maintenance_lease(root):
-        return _compact_ann_index_locked(spark, root)
-
-
-ANN_AUTO_COMPACT_GENS = 8
-
-
-def _compact_ann_index_locked(spark: SparkSession, root: str) -> None:
-    from ..state import gen_dir, read_manifest, write_manifest
-
-    man = read_manifest(root)
-    if man is None:
-        raise ValueError(f"no ANN index at {root}; run ensure_ann_index")
-    gen, base = man["gen"], man.get("base_gen", 0)
-    if base == gen:
-        return  # single live generation — nothing to merge
-    _read_ann_cells(spark, root, man).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(gen_dir(root, "cells", gen + 1))
-    write_manifest(
-        root,
-        {**man, "gen": gen + 1, "base_gen": gen + 1, "grace_floor": base},
-    )
+    _ann_state(spark, root).compact()
 
 
 def expire_ann_state(root: str) -> list:
@@ -5959,25 +5845,7 @@ def expire_ann_state(root: str) -> list:
     indistinguishable from crashed-writer orphans, and deleting them
     between its parquet write and manifest commit would publish a
     manifest pointing at missing files."""
-    from ..state import maintenance_lease
-
-    with maintenance_lease(root):
-        return _expire_ann_state_locked(root)
-
-
-def _expire_ann_state_locked(root: str, floor: int | None = None) -> list:
-    """Body of :func:`expire_ann_state`; caller holds the lease.
-    ``floor`` widens the keep set downward for the auto-compaction path
-    (generations superseded only by the most recent compaction survive
-    one extra cycle — see ``_expire_dedup_state_locked``)."""
-    from ..state import expire_generations, read_manifest
-
-    man = read_manifest(root)
-    if man is None:
-        raise ValueError(f"no ANN index at {root}; nothing to expire")
-    lo = man.get("base_gen", 0) if floor is None else min(floor, man["gen"])
-    live = set(range(lo, man["gen"] + 1))
-    return expire_generations(root, {"cells": live})
+    return _ann_state(None, root).expire()
 
 
 @query(

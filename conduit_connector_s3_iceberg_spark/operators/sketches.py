@@ -507,18 +507,16 @@ def maintain_cms_stream(
     still double-count that one epoch; on a transactional store (Iceberg)
     both writes share one MERGE transaction and the guarantee is exact.
     """
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_cms_epoch(
-                wh, register_table, key_col, batch, epoch_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    from ..streaming.cdc import start_foreach_batch
+
+    return start_foreach_batch(
+        stream,
+        lambda batch, epoch_id: apply_cms_epoch(
+            wh, register_table, key_col, batch, epoch_id
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------- mergeable histogram quantiles --

@@ -1,10 +1,14 @@
 """Generation-manifest state machinery shared by every persisted index.
 
-Three state roots follow the same discipline — the dedup labels table
-(``operators/dedup.py``), the cell-partitioned ANN index
-(``operators/similarity.py``), and the maintenance-demo staging corpus —
-and this module owns the invariants they share, so the next persisted
-index gets all of them for free:
+Seven state roots persist derived data across query sessions: the dedup
+labels table and the shingle counts (``operators/dedup.py``), the
+SemDeDup seen-vector table and the cell-partitioned ANN index
+(``operators/similarity.py``), the graph state
+(``operators/graph_state.py``), the token counts
+(``operators/lm_state.py``) and the ground-truth top-k
+(``operators/gt_topk.py``). They all run ONE lifecycle,
+:class:`StateRoot`, and this module owns it together with the
+invariants it rests on:
 
 * **Atomic manifest commit.** Every mutation stages its files into
   generation-scoped directories that no reader lists until the manifest
@@ -16,6 +20,8 @@ index gets all of them for free:
   (size, mtime_ns); ``snapshot_delta`` classifies a corpus change as
   unchanged / pure-append / rewrite, which is what lets maintenance run
   O(delta) on appends and rebuild only on rewrites.
+* **Serialized maintenance.** Writers take ``maintenance_lease``;
+  readers never do.
 * **Coherence checking.** When a state root and a separate staging area
   must agree (the maintenance demo), the manifest carries a phase stamp
   (``stamp_manifest``) and readers verify it before serving — deleting
@@ -26,6 +32,19 @@ index gets all of them for free:
   after compaction, orphans from crashed writers above ``gen``), so
   compaction actually reclaims space instead of leaving every historical
   generation on disk forever.
+
+The lifecycle (:meth:`StateRoot.ensure` for corpus-driven serving,
+:meth:`StateRoot.maintain` for row-level deltas): serve lock-free while
+the manifest's snapshot is unchanged; otherwise take the lease, re-read
+the manifest, classify the change, fold the appended files or rebuild
+on a rewrite (or a single-file source), run the family's optional
+post-step, and after a fold auto-compact once the live generation width
+passes the manifest's ``auto_compact_gens`` (default
+:data:`AUTO_COMPACT_GENS`), expiring with one compaction cycle of grace.
+A family supplies only its snapshot, ``build()``, ``fold(man, delta)``,
+compaction rewrite and artifact kinds; a fold that declines its delta
+(:class:`FoldDeclined`) makes the file path rebuild and the row-level
+path raise.
 """
 
 from __future__ import annotations
@@ -292,3 +311,181 @@ def expire_generations(root: str, keep: dict[str, set[int]]) -> list[str]:
                 shutil.rmtree(path, ignore_errors=True)
                 deleted.append(path)
     return deleted
+
+
+AUTO_COMPACT_GENS = 8  # live generation width that triggers auto-compaction
+
+
+class FoldDeclined(ValueError):
+    """A family's fold refuses a delta whose premise broke (an FK orphan,
+    an update-shaped row, a probe the stream has no corpus for). The file
+    path rebuilds from the corpus instead; the row-level path has no
+    corpus and lets this ValueError, carrying the fold's reason, raise."""
+
+
+class StateRoot:
+    """The one lifecycle every persisted state family runs (see the
+    module docstring). A family supplies:
+
+    * ``build()`` — stage generation 0 into the freshly emptied root and
+      return its manifest fields;
+    * ``fold(man, delta)`` — stage ``delta`` as the next generation and
+      return the manifest to commit (``man`` itself when the delta adds
+      nothing); raise :class:`FoldDeclined` to refuse the delta;
+    * ``compact(man, gen)`` — stage the merge of the live generations as
+      ``gen`` and return any extra manifest fields (``None``: no
+      compaction);
+    * ``kinds`` — the appended artifact kinds expiry sweeps, plus an
+      optional ``expire_extra(man, lo, floor)`` for artifacts outside
+      the ``<kind>/gen_<g>`` layout;
+    * ``commit(man)`` — how a manifest is committed (default: plain
+      :func:`write_manifest`);
+    * ``snapshot_key`` — the manifest key holding the source snapshot.
+
+    ``name`` and ``hint`` word the error raised when a lease-holding
+    operation finds no manifest (``no <name> at <root>; <hint>``)."""
+
+    def __init__(
+        self,
+        root: str,
+        name: str,
+        *,
+        build=None,
+        fold=None,
+        compact=None,
+        kinds: tuple[str, ...] = (),
+        expire_extra=None,
+        commit=None,
+        snapshot_key: str = "files",
+        hint: str = "",
+    ):
+        self.root, self.name, self.hint = root, name, hint
+        self.key = snapshot_key
+        self.kinds = tuple(kinds)
+        self._build, self._fold, self._compact = build, fold, compact
+        self._expire_extra = expire_extra
+        self._commit = commit or (lambda man: write_manifest(root, man))
+
+    def read(self) -> dict | None:
+        """The committed manifest; one without a generation predates the
+        protocol and counts as absent (it is rebuilt)."""
+        man = read_manifest(self.root)
+        return man if man is not None and "gen" in man else None
+
+    def _classify(self, man: dict, cur: dict) -> tuple[str, list[str]]:
+        return snapshot_delta(man.get(self.key, {}), cur)
+
+    def ensure(
+        self,
+        snapshot,
+        read_delta,
+        appendable: bool = True,
+        stale=None,
+        refresh=None,
+    ) -> dict:
+        """Serve, fold or rebuild as the source ``snapshot()`` dictates
+        and return the committed manifest. ``read_delta(new_files)``
+        loads an append's new files for the fold; ``appendable=False``
+        (a single-file source) rebuilds on any change. ``stale(man)``
+        / ``refresh(man)`` are the optional post-step: a stale manifest
+        leaves the lock-free path, and ``refresh`` runs under the lease
+        after any fold or rebuild."""
+        man = self.read()
+        if (
+            man is not None
+            and self._classify(man, snapshot())[0] == "unchanged"
+            and not (stale and stale(man))
+        ):
+            return man  # lock-free serve
+        with maintenance_lease(self.root):
+            man, cur = self.read(), snapshot()  # re-read under the lease
+            if man is not None:
+                kind, new_files = self._classify(man, cur)
+                if kind == "appended" and appendable:
+                    try:
+                        man = self._fold_locked(man, read_delta(new_files), cur)
+                    except FoldDeclined:
+                        man = None
+                elif kind != "unchanged":
+                    man = None
+            if man is None:
+                man = self._rebuild(cur)
+            return refresh(man) if refresh else man
+
+    def run(self, step, hint: str | None = None):
+        """Lease, require a manifest, return ``step(man)``."""
+        with maintenance_lease(self.root):
+            man = self.read()
+            if man is None:
+                hint = self.hint if hint is None else hint
+                raise ValueError(
+                    f"no {self.name} at {self.root}" + (f"; {hint}" if hint else "")
+                )
+            return step(man)
+
+    def maintain(self, delta, files: dict | None = None) -> dict:
+        """Row-level maintenance: fold ``delta`` (a declined fold
+        raises), then auto-compact. ``files`` replaces the recorded
+        snapshot; ``None`` keeps it."""
+        return self.run(lambda man: self._fold_locked(man, delta, files))
+
+    def build(self, files: dict | None = None) -> dict:
+        """Full rebuild under the lease."""
+        with maintenance_lease(self.root):
+            return self._rebuild(files)
+
+    def compact(self) -> dict:
+        """Merge the live generations into one base generation."""
+        return self.run(self._compact_locked)
+
+    def expire(self) -> list:
+        """Delete generation directories the committed manifest no longer
+        reaches. Takes the lease: a concurrent maintainer's staged gen+1
+        files look exactly like a crashed writer's orphans."""
+        return self.run(self._expire_locked, hint="nothing to expire")
+
+    def _rebuild(self, files: dict | None) -> dict:
+        shutil.rmtree(self.root, ignore_errors=True)
+        os.makedirs(self.root, exist_ok=True)
+        return self._commit({**self._build(), self.key: files or {}})
+
+    def _fold_locked(self, man: dict, delta, files: dict | None) -> dict:
+        new = {
+            **self._fold(man, delta),
+            self.key: man.get(self.key, {}) if files is None else files,
+        }
+        if new != man:
+            man = self._commit(new)
+        if self._compact is None:
+            return man
+        thresh = int(man.get("auto_compact_gens", AUTO_COMPACT_GENS))
+        if man["gen"] - man.get("base_gen", 0) + 1 <= thresh:
+            return man
+        # one-cycle grace: generations below the PRE-compaction base were
+        # superseded by the previous compaction and have survived a full
+        # extra cycle, so a DataFrame handed out before that compaction
+        # has had the whole cycle to materialize; the ones this
+        # compaction supersedes are kept until the next one
+        floor = int(man.get("base_gen", 0))
+        man = self._compact_locked(man)
+        self._expire_locked(man, floor)
+        return man
+
+    def _compact_locked(self, man: dict) -> dict:
+        gen, base = man["gen"], man.get("base_gen", 0)
+        if base == gen:
+            return man  # single live generation — nothing to merge
+        extra = self._compact(man, gen + 1) or {}
+        return self._commit({**man, "gen": gen + 1, "base_gen": gen + 1, **extra})
+
+    def _expire_locked(self, man: dict, floor: int | None = None) -> list:
+        """``floor`` widens the keep set downward for auto-compaction
+        (generations in ``[floor, base_gen)`` survive one more cycle);
+        ``None`` keeps exactly the manifest-reachable set."""
+        gen = man["gen"]
+        lo = man.get("base_gen", 0) if floor is None else min(floor, gen)
+        live = set(range(lo, gen + 1))
+        deleted = expire_generations(self.root, {k: live for k in self.kinds})
+        if self._expire_extra is not None:
+            deleted += self._expire_extra(man, lo, floor)
+        return deleted

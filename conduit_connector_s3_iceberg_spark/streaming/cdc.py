@@ -34,6 +34,30 @@ from ..functions.codec import CDC_ENVELOPE, conform_payload, key_struct
 UPSERT_OPS = ("create", "snapshot", "update")
 
 
+def start_foreach_batch(
+    stream: DataFrame,
+    epoch,
+    checkpoint_dir: str,
+    available_now: bool = True,
+    output_mode: str = "update",
+):
+    """Start ``stream`` with ``epoch(batch, epoch_id)`` as its
+    foreachBatch body — the one streaming driver every micro-batch
+    maintainer in the package shares. The checkpoint holds only Spark's
+    offsets: each body keeps its own state (a table, a manifest-committed
+    state root) and is idempotent under at-least-once re-delivery.
+    ``available_now`` drains what the source holds and stops. Returns the
+    started StreamingQuery."""
+    writer = (
+        stream.writeStream.foreachBatch(epoch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def read_cdc_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -286,14 +310,7 @@ def apply_cdc_stream(
             return
         apply_cdc_batch(wh, table, decode_cdc(batch, schema, key_fields), key_fields)
 
-    writer = (
-        stream.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _epoch, checkpoint_dir, available_now)
 
 
 def route_cdc_batch(

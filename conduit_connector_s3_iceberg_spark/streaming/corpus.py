@@ -24,6 +24,7 @@ from ..operators.text import (
     _tokens,
     quality_col,
 )
+from .cdc import start_foreach_batch
 
 
 def clean_doc_stream(
@@ -212,15 +213,11 @@ def maintain_mixture_stream(
 ):
     """Continuously maintain the mixture-shift monitor from a document
     stream (columns ``doc_id, source, text``)."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_mixture_epoch(
-                wh, prefix, batch, epoch_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream,
+        lambda batch, epoch_id: apply_mixture_epoch(
+            wh, prefix, batch, epoch_id
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cdc import start_foreach_batch
+
 
 def _fingerprint() -> F.Column:
     # the engine-wide content fingerprint (operators/dedup.py uses the
@@ -78,18 +80,14 @@ def maintain_dedup_stream(
     incremental corpus dedup. State = the fingerprint table itself —
     unbounded in fingerprints but O(1) per admitted doc, queryable, and
     shared with the batch engine; nothing lives in the state store."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_dedup_epoch(
-                wh, fp_table, out_table, batch, epoch_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream,
+        lambda batch, epoch_id: apply_dedup_epoch(
+            wh, fp_table, out_table, batch, epoch_id
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------------ family-savings monitor
@@ -219,18 +217,14 @@ def maintain_family_savings_stream(
 ):
     """Continuously maintain the family-savings manifest state from a
     document stream (columns ``doc_id, text``)."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_family_savings_epoch(
-                wh, prefix, batch, epoch_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream,
+        lambda batch, epoch_id: apply_family_savings_epoch(
+            wh, prefix, batch, epoch_id
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------------ labels-table maintenance
@@ -248,18 +242,6 @@ def maintain_family_savings_stream(
 # foreachBatch retry simply overwrites them.
 
 
-def apply_labels_epoch(state_root: str, batch: DataFrame, epoch_id: int) -> None:
-    """One idempotent epoch of labels-state maintenance. Module-level so
-    replay and crash-window semantics are unit-testable."""
-    from ..operators.dedup import maintain_dedup_state
-
-    if batch.isEmpty():
-        return
-    maintain_dedup_state(
-        batch.sparkSession, batch.select("doc_id", "text"), state_root
-    )
-
-
 def maintain_labels_stream(
     stream: DataFrame,
     state_root: str,
@@ -272,18 +254,15 @@ def maintain_labels_stream(
     the queryable per-document dedup-metadata table itself — nothing
     lives in the Spark state store, so restarts resume from the manifest
     and the table is shared with every batch consumer."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_labels_epoch(
-                state_root, batch, epoch_id
+    from ..operators.dedup import maintain_dedup_state
+
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
+        if not batch.isEmpty():
+            maintain_dedup_state(
+                batch.sparkSession, batch.select("doc_id", "text"), state_root
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    return start_foreach_batch(stream, epoch, checkpoint_dir, available_now)
 
 
 # ------------------------------------------ substring-overlap admission ----
@@ -393,18 +372,14 @@ def maintain_substring_gate_stream(
     already-admitted corpus stays at or below ``max_overlap`` (columns:
     ``doc_id``, ``text``). State = the window-digest table itself —
     queryable, restart-surviving, shared with the batch operator."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_substring_gate_epoch(
-                wh, idx_table, out_table, b, e, max_overlap
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream,
+        lambda b, e: apply_substring_gate_epoch(
+            wh, idx_table, out_table, b, e, max_overlap
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------ semantic novelty admission ----
@@ -512,18 +487,14 @@ def maintain_semantic_gate_stream(
     ``emb_semantic_gate``. State = the seen-vector table itself —
     queryable, restart-surviving, shared with the batch engine; nothing
     lives in the state store."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_semantic_gate_epoch(
-                wh, idx_table, out_table, b, e, tau
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream,
+        lambda b, e: apply_semantic_gate_epoch(
+            wh, idx_table, out_table, b, e, tau
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------- counts-table maintenance -----
@@ -540,18 +511,6 @@ def maintain_semantic_gate_stream(
 # union under continuous ingest.
 
 
-def apply_counts_epoch(state_root: str, batch, epoch_id: int) -> None:
-    """One idempotent epoch of counts-state maintenance. Module-level so
-    replay and crash-window semantics are unit-testable."""
-    from ..operators.dedup import maintain_shingle_counts
-
-    if batch.isEmpty():
-        return
-    maintain_shingle_counts(
-        batch.sparkSession, batch.select("doc_id", "text"), state_root
-    )
-
-
 def maintain_counts_stream(
     stream,
     state_root: str,
@@ -565,15 +524,12 @@ def maintain_counts_stream(
     the Spark state store, restarts resume from the manifest, and every
     batch consumer (ngram/weighted Jaccard, threshold curve, prefix
     filter, containment) shares it."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_counts_epoch(
-                state_root, batch, epoch_id
+    from ..operators.dedup import maintain_shingle_counts
+
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
+        if not batch.isEmpty():
+            maintain_shingle_counts(
+                batch.sparkSession, batch.select("doc_id", "text"), state_root
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    return start_foreach_batch(stream, epoch, checkpoint_dir, available_now)

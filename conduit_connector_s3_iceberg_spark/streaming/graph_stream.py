@@ -3,10 +3,11 @@
 The batch path (``operators/graph_state.ensure_graph_state``) maintains
 the trade-graph state from appended corpus files; this twin maintains
 the SAME on-disk state from a CDC-shaped record stream, one idempotent
-foreachBatch epoch at a time — the ``maintain_counts_stream`` /
-``maintain_semdedup_stream`` protocol: nothing lives in the Spark state
-store, the manifest IS the recovery point, restarts resume from it, and
-every batch consumer (``graph_pagerank`` / ``graph_ppr_seeded`` /
+foreachBatch epoch at a time — the protocol every state-family twin
+shares: epochs run through ``streaming.cdc.start_foreach_batch`` into
+the family's row-level ``state.StateRoot`` maintain, nothing lives in
+the Spark state store, the manifest IS the recovery point, restarts
+resume from it, and every batch consumer (``graph_pagerank`` / ``graph_ppr_seeded`` /
 ``graph_label_propagation`` / ``graph_state_audit``) shares the result.
 
 Stream schema is the union CDC shape a single order-slice topic carries:
@@ -33,26 +34,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .cdc import start_foreach_batch
+
 GRAPH_STREAM_SCHEMA = (
     "kind string, okey bigint, ck bigint, sk bigint, pk bigint"
 )
-
-
-def apply_graph_epoch(state_root: str, batch, epoch_id: int) -> None:
-    """One idempotent epoch of graph-state maintenance. Module-level so
-    replay and crash-window semantics are unit-testable."""
-    from ..operators.graph_state import maintain_graph_delta
-
-    if batch.isEmpty():
-        return
-    maintain_graph_delta(
-        batch.sparkSession,
-        batch.filter(F.col("kind") == "order").select("okey", "ck"),
-        batch.filter(F.col("kind") == "lineitem").select(
-            "okey", "sk", "pk"
-        ),
-        state_root,
-    )
 
 
 def maintain_graph_stream(
@@ -62,17 +48,19 @@ def maintain_graph_stream(
     available_now: bool = True,
 ):
     """Continuously maintain the graph state at ``state_root`` (created
-    by ``ensure_graph_state`` / ``_build_locked``) from an order-slice
-    record stream with :data:`GRAPH_STREAM_SCHEMA` columns."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_graph_epoch(
-                state_root, batch, epoch_id
+    by ``ensure_graph_state``) from an order-slice record stream with
+    :data:`GRAPH_STREAM_SCHEMA` columns."""
+    from ..operators.graph_state import maintain_graph_delta
+
+    def epoch(batch, epoch_id: int) -> None:
+        if not batch.isEmpty():
+            maintain_graph_delta(
+                batch.sparkSession,
+                batch.filter(F.col("kind") == "order").select("okey", "ck"),
+                batch.filter(F.col("kind") == "lineitem").select(
+                    "okey", "sk", "pk"
+                ),
+                state_root,
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    return start_foreach_batch(stream, epoch, checkpoint_dir, available_now)

@@ -4,10 +4,12 @@ The batch path (``operators/gt_topk.ensure_gt_topk``) maintains the
 exact ANN-evaluation truth table from appended corpus files; this twin
 maintains the SAME on-disk state from an append-only embedding stream
 (columns ``vec_id, embedding``), one idempotent foreachBatch epoch at a
-time — the ``maintain_token_counts_stream`` protocol: nothing lives in
-the Spark state store, the manifest IS the recovery point, restarts
-resume from it, and every batch consumer (``sim_topk_bruteforce``, the
-recall audits, the retrieval-eval family ``retrieval_ndcg_mrr`` /
+time — the protocol every state-family twin shares: epochs run through
+``streaming.cdc.start_foreach_batch`` into the family's row-level
+``state.StateRoot`` maintain, nothing lives in the Spark state store,
+the manifest IS the recovery point, restarts resume from it, and every
+batch consumer (``sim_topk_bruteforce``, the recall audits, the
+retrieval-eval family ``retrieval_ndcg_mrr`` /
 ``retrieval_avg_precision`` / ``retrieval_pr_curve``) shares the
 result.  Epochs score the incoming vectors against the PERSISTED probe
 vectors (GT_QUERIES × DIM floats) and merge into the standing K rows
@@ -27,19 +29,9 @@ queries served from it match their from-scratch oracles.
 
 from __future__ import annotations
 
+from .cdc import start_foreach_batch
+
 GT_STREAM_SCHEMA = "vec_id bigint, embedding array<float>"
-
-
-def apply_gt_epoch(state_root: str, batch, epoch_id: int) -> None:
-    """One idempotent epoch of ground-truth maintenance. Module-level so
-    replay and crash-window semantics are unit-testable."""
-    from ..operators.gt_topk import maintain_gt_topk
-
-    if batch.isEmpty():
-        return
-    maintain_gt_topk(
-        batch.sparkSession, batch.select("vec_id", "embedding"), state_root
-    )
 
 
 def maintain_gt_topk_stream(
@@ -51,15 +43,14 @@ def maintain_gt_topk_stream(
     """Continuously maintain the ground-truth top-k state at
     ``state_root`` (created by ``ensure_gt_topk``) from an append-only
     embedding stream with :data:`GT_STREAM_SCHEMA` columns."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_gt_epoch(
-                state_root, batch, epoch_id
+    from ..operators.gt_topk import maintain_gt_topk
+
+    def epoch(batch, epoch_id: int) -> None:
+        if not batch.isEmpty():
+            maintain_gt_topk(
+                batch.sparkSession,
+                batch.select("vec_id", "embedding"),
+                state_root,
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    return start_foreach_batch(stream, epoch, checkpoint_dir, available_now)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.codec import conform_payload
-from .cdc import UPSERT_OPS
+from .cdc import UPSERT_OPS, start_foreach_batch
 
 SIGN_COL = "__sign"
 
@@ -159,14 +159,7 @@ def maintain_summary_stream(
         )
         mark_epoch_applied(wh, epoch_table, batch.sparkSession, epoch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _epoch, checkpoint_dir, available_now)
 
 
 # ------------------------------------------------ shared admission probes --
@@ -306,14 +299,7 @@ def maintain_decayed_popularity_stream(
         )
         mark_epoch_applied(wh, epoch_table, batch.sparkSession, epoch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _epoch, checkpoint_dir, available_now)
 
 
 def decayed_popularity_from_summary(wh, summary_table: str) -> DataFrame:
@@ -370,14 +356,7 @@ def maintain_retention_stream(
         )
         mark_epoch_applied(wh, epoch_table, batch.sparkSession, epoch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _epoch, checkpoint_dir, available_now)
 
 
 def retention_from_state(wh, state_table: str) -> DataFrame:
@@ -466,11 +445,4 @@ def maintain_ann_index_stream(
         )
         _mark(epoch_id, batch.count())
 
-    writer = (
-        stream.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _epoch, checkpoint_dir, available_now)

@@ -4,9 +4,11 @@ The batch path (``operators/lm_state.ensure_token_counts``) maintains
 the lm-family token front end from appended corpus files; this twin
 maintains the SAME on-disk state from an append-only document stream
 (columns ``doc_id, text``), one idempotent foreachBatch epoch at a time
-— the ``maintain_counts_stream`` protocol: nothing lives in the Spark
-state store, the manifest IS the recovery point, restarts resume from
-it, and every batch consumer (``lm_bigram_score`` / ``lm_kneser_ney``
+— the protocol every state-family twin shares: epochs run through
+``streaming.cdc.start_foreach_batch`` into the family's row-level
+``state.StateRoot`` maintain, nothing lives in the Spark state store,
+the manifest IS the recovery point, restarts resume from it, and every
+batch consumer (``lm_bigram_score`` / ``lm_kneser_ney``
 / ``lm_interpolation_curve`` / ``text_dsir_weights`` / ...) shares the
 result. Replay safety is the doc_id anti-join in
 ``maintain_token_counts`` (per-document counts: a re-delivered epoch
@@ -15,19 +17,9 @@ adds nothing), so end-to-end exactly-once falls out of idempotence.
 
 from __future__ import annotations
 
+from .cdc import start_foreach_batch
+
 TOKEN_STREAM_SCHEMA = "doc_id bigint, text string"
-
-
-def apply_token_counts_epoch(state_root: str, batch, epoch_id: int) -> None:
-    """One idempotent epoch of token-counts maintenance. Module-level so
-    replay and crash-window semantics are unit-testable."""
-    from ..operators.lm_state import maintain_token_counts
-
-    if batch.isEmpty():
-        return
-    maintain_token_counts(
-        batch.sparkSession, batch.select("doc_id", "text"), state_root
-    )
 
 
 def maintain_token_counts_stream(
@@ -39,15 +31,12 @@ def maintain_token_counts_stream(
     """Continuously maintain the token/bigram counts state at
     ``state_root`` (created by ``ensure_token_counts``) from an
     append-only document stream."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_token_counts_epoch(
-                state_root, batch, epoch_id
+    from ..operators.lm_state import maintain_token_counts
+
+    def epoch(batch, epoch_id: int) -> None:
+        if not batch.isEmpty():
+            maintain_token_counts(
+                batch.sparkSession, batch.select("doc_id", "text"), state_root
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    return start_foreach_batch(stream, epoch, checkpoint_dir, available_now)

@@ -45,6 +45,7 @@ from ..operators.similarity import (
     _spark_dot,
     sem_block_expr_frozen,
 )
+from .cdc import start_foreach_batch
 
 
 def _prepared(batch: DataFrame, mu: list, nbits: int) -> DataFrame:
@@ -161,15 +162,11 @@ def maintain_semdedup_stream(
     face of SemDeDup admission. State = the seen-vector index table
     itself — O(1) per seen vector, block-partitioned, queryable, shared
     with the batch engine; nothing lives in the state store."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch_id: apply_semdedup_epoch(
-                wh, idx_table, out_table, batch, epoch_id, mu, nbits
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream,
+        lambda batch, epoch_id: apply_semdedup_epoch(
+            wh, idx_table, out_table, batch, epoch_id, mu, nbits
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

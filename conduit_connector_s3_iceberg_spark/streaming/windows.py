@@ -19,8 +19,10 @@ state store in production; local HDFS-backed here).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .cdc import start_foreach_batch
 
 
 def tumbling_rollup(
@@ -112,12 +114,6 @@ def dedup_stream(
     return events.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
-def late_data_filter(time_col: Column | str, watermark_ts: Column | str) -> Column:
-    """Explicit late/on-time predicate for batch backfills that must match
-    the streaming watermark semantics exactly."""
-    return F.col(time_col) >= F.col(watermark_ts)
-
-
 def trending_topk_stream(
     events: DataFrame,
     wh,
@@ -171,11 +167,10 @@ def trending_topk_stream(
         # epoch (at-least-once) must not double-append its rows
         wh.append(result_table, ranked, mark=f"e{epoch_id}")
 
-    writer = (
-        agg.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        agg,
+        _epoch,
+        checkpoint_dir,
+        available_now,
+        output_mode="append",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -27,7 +27,7 @@ from conduit_connector_s3_iceberg_spark.operators.graph import (
     _pagerank_from_edges,
     _ppr_from_edges,
 )
-from conduit_connector_s3_iceberg_spark.state import read_manifest
+from conduit_connector_s3_iceberg_spark.state import read_manifest, stamp_manifest
 
 SF = "/root/testdata/sf0.001"
 
@@ -170,14 +170,14 @@ def test_fk_orphan_degrades_to_rebuild(spark, tmp_path, isolated_root):
 
 
 def test_autocompaction_advances_base_gen_and_expires(
-    spark, tmp_path, isolated_root, monkeypatch
+    spark, tmp_path, isolated_root
 ):
-    monkeypatch.setattr(gs, "GRAPH_AUTO_COMPACT_GENS", 2)
     sf_dir, d_orders, d_li = _stage_corpus(
         spark, tmp_path, "o_orderkey % 4 < 2"
     )
     gs.ensure_graph_state(spark, sf_dir)
     root = gs.graph_state_path(sf_dir)
+    stamp_manifest(root, auto_compact_gens=2)
     d0 = d_orders.filter("o_orderkey % 4 = 0")
     l0 = d_li.join(d0.select(F.col("o_orderkey").alias("k")),
                    d_li.l_orderkey == F.col("k")).drop("k")

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from conduit_connector_s3_iceberg_spark.operators import graph_state as gs
 from conduit_connector_s3_iceberg_spark.operators.graph import LINK_DEG_CAP
-from conduit_connector_s3_iceberg_spark.state import read_manifest
+from conduit_connector_s3_iceberg_spark.state import read_manifest, stamp_manifest
 
 from test_round11_graph_state import (  # noqa: F401 (fixture re-export)
     SF,
@@ -191,17 +191,17 @@ def test_maintenance_defers_fix_and_top_refresh(
 
 
 def test_compaction_folds_adjustments_to_true_counts(
-    spark, tmp_path, isolated_root, monkeypatch
+    spark, tmp_path, isolated_root
 ):
     """Past the threshold, the adjustment generations fold into a single
     base generation holding TRUE counts, and the warm read skips the
     fold (single-path fast case)."""
-    monkeypatch.setattr(gs, "GRAPH_AUTO_COMPACT_GENS", 2)
     sf_dir, d_orders, d_li = _stage_corpus(
         spark, tmp_path, "o_orderkey % 4 < 2"
     )
     gs.ensure_graph_state(spark, sf_dir)
     root = gs.graph_state_path(sf_dir)
+    stamp_manifest(root, auto_compact_gens=2)
     for i, pred in enumerate(("o_orderkey % 4 = 0", "o_orderkey % 4 = 1")):
         o = d_orders.filter(pred)
         l = d_li.join(
